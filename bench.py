@@ -5,19 +5,20 @@ local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
 Measured stages:
   index_build      — full inverted-index build incl. blocked/compressed
                      postings (docs/sec reported as ``docs_per_sec``)
-  bm25_q*          — per-query BM25 top-k latency (p50/p99 reported)
   bm25_topk_batch  — all queries in one scoring join
   rm3_topk_batch   — sequential RM3 expansion + expanded re-run
-  serving_*        — checkpoint publish cost + per-query latency of the
-                     no-Spark serving tier (scoring/local.LocalSearcher)
+  serving_*        — checkpoint publish cost + per-query BM25 and RM3
+                     latency (p50/p99) of the no-Spark serving tier
+                     (scoring/local.LocalSearcher)
   minhash_dedup    — MinHash→LSH→verify near-dup pairs over documents
   cosine_topk      — brute-force cosine ANN for 4 probes
   eval_metrics     — MAP/P@10/NDCG/MRR aggregation
 
 ``--scaling`` re-runs the index build at two parallelism levels
-(local[N] and local[4N], N = SPARK_GRAFT_SCALE_BASE or 8) in fresh
-subprocesses and reports throughput + scaling efficiency — the
-two-cluster-size evidence of BASELINE.md.
+(local[N] and local[4N], N = SPARK_GRAFT_SCALE_BASE or 2; 4N must fit
+the process's CPU affinity set) in fresh subprocesses and reports
+throughput + scaling efficiency — the two-cluster-size evidence of
+BASELINE.md.
 """
 
 from __future__ import annotations
@@ -102,48 +103,11 @@ def run_suite(out_path: str | None = None) -> dict:
     # seed the contract's index memo so query benches measure QUERY time
     webtext._INDEX_CACHE[(SF_DIR, False, id(spark))] = idx
 
-    from sequential_query_expansion_spark.scoring.bm25 import (
-        query_term_table, score_topk,
-    )
+    from sequential_query_expansion_spark.scoring.bm25 import query_term_table
 
     queries = webtext.queries_df(spark)
     qt_all = query_term_table(queries).persist()
     qt_all.count()
-
-    # per-query latency through the serving path: same rank-identical
-    # plan, exchanges sized for point queries (see scoring/service.py —
-    # single-query latency on local mode is scheduling-bound)
-    from sequential_query_expansion_spark.scoring.service import QueryService
-
-    svc = QueryService(spark, idx)                 # warms codegen too
-    per_q = []
-    for qid in sorted(webtext.WEB_QUERIES):
-        qt = qt_all.filter(qt_all.qid == qid)
-        t0 = time.perf_counter()
-        out = svc.topk(qt, k=10)
-        per_q.append(time.perf_counter() - t0)
-        out.unpersist()
-    timings["bm25_p50"] = round(statistics.median(per_q), 3)
-    timings["bm25_p99"] = round(
-        sorted(per_q)[max(0, int(len(per_q) * 0.99) - 1)], 3
-    )
-
-    # expanded (RM3) per-query latency — the BASELINE.md latency metric
-    # covers unexpanded AND expanded runs
-    from sequential_query_expansion_spark.expansion.rm3 import rm3_topk
-
-    rm3_topk(idx, qt_all, k=10).count()  # warm-up
-    per_q_x = []
-    for qid in sorted(webtext.WEB_QUERIES):
-        qt = qt_all.filter(qt_all.qid == qid)
-        t0 = time.perf_counter()
-        out = svc.rm3_topk(qt, k=10)
-        per_q_x.append(time.perf_counter() - t0)
-        out.unpersist()
-    timings["rm3_p50"] = round(statistics.median(per_q_x), 3)
-    timings["rm3_p99"] = round(
-        sorted(per_q_x)[max(0, int(len(per_q_x) * 0.99) - 1)], 3
-    )
 
     # serving-tier per-query latency: LocalSearcher answers the same
     # queries straight off the checkpointed on-disk index with ZERO
@@ -184,7 +148,7 @@ def run_suite(out_path: str | None = None) -> dict:
 
     # serving-tier PRF latency: RM3 runs entirely in-process (feedback
     # pass, stored doc-vector fetch, expanded re-run) — same rankings as
-    # the scheduling-bound Spark rm3_p50 line, at point-query cost
+    # the Spark rm3_topk plan, at point-query cost
     for qid in sorted(qterms):
         searcher.rm3_topk(qterms[qid], k=10)  # warm term + dv reads
     per_q_r = []
@@ -303,8 +267,15 @@ def run_scaling() -> None:
 
     base = int(os.environ.get("SPARK_GRAFT_SCALE_BASE", "2"))
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "2"))
+    usable = sorted(os.sched_getaffinity(0))
+    if base * 4 > len(usable):
+        sys.exit(
+            f"bench.py --scaling: the {base * 4}-core level needs {base * 4} "
+            f"CPUs, but this process may run on {len(usable)}; set "
+            f"SPARK_GRAFT_SCALE_BASE so that 4 x base <= {len(usable)}"
+        )
     levels = [base, base * 4]
-    if base * 16 <= (os.cpu_count() or base * 4):
+    if base * 16 <= len(usable):
         levels.append(base * 16)  # extra point: shows the box's ceiling
     have_taskset = shutil.which("taskset") is not None
     results = {}
@@ -315,7 +286,8 @@ def run_scaling() -> None:
         if have_taskset:
             # pin the JVM + python workers to exactly `cpus` cores: the
             # faithful local simulation of an N-executor cluster
-            cmd = ["taskset", "-c", f"0-{cpus - 1}"] + cmd
+            cpu_list = ",".join(str(c) for c in usable[:cpus])
+            cmd = ["taskset", "-c", cpu_list] + cmd
         best = None
         for _ in range(max(1, repeats)):
             out = subprocess.run(

@@ -80,6 +80,7 @@ def main() -> int:
         topics = trec.read_trec_topics_sgml(spark, args.topics)
     else:
         topics = trec.read_topics_lines(spark, args.topics)
+    qt = query_term_table(topics)
     if args.indri:
         if args.method != "bm25":
             raise SystemExit("--indri runs the phrase-clause BM25 scorer "
@@ -111,11 +112,7 @@ def main() -> int:
             )
         else:
             run = phrase_weighted_topk(idx, idx.positional, tc, pc, k=args.k)
-        trec.write_trec_run(run, args.output, tag="sqe-spark")
-        print(f"wrote run ({run.count()} rows) -> {args.output}")
-        return 0
-    qt = query_term_table(topics)
-    if args.rm3:
+    elif args.rm3:
         if args.method == "two":
             raise SystemExit("--rm3 supports --method bm25 or dir")
         run = rm3_topk(
@@ -134,7 +131,10 @@ def main() -> int:
     else:
         run = score_topk(idx, qt, k=args.k)
     trec.write_trec_run(run, args.output, tag="sqe-spark")
-    print(f"wrote run ({run.count()} rows) -> {args.output}")
+    # count the written file: counting `run` would execute the whole
+    # retrieval (expansion and scoring) a second time
+    n_rows = spark.read.text(args.output).count()
+    print(f"wrote run ({n_rows} rows) -> {args.output}")
     return 0
 
 

@@ -74,48 +74,93 @@ def _qterms_cte() -> str:
     return f"qterms(qid, term, weight) AS (VALUES\n    {vals})"
 
 
-_SCORED = f"""
-scored AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM qterms q
+def _bm25(w: str, tf: str = "tf.tf", df: str = "v.df",
+          k1: float = K1, b: float = B) -> str:
+    """One BM25 contribution, weighted by ``w``; needs ``stats s`` and
+    ``dl`` in scope (Lucene-style non-negative idf, as scoring/bm25.py)."""
+    return (
+        f"{w} * ln(1.0 + (s.n_docs - {df} + 0.5) / ({df} + 0.5)) "
+        f"* {tf} * {k1 + 1.0} "
+        f"/ ({tf} + {k1} * (1.0 - {b} + {b} * dl.dl / s.avgdl))"
+    )
+
+
+def _bm25_scored(name: str, terms: str, where: str = "",
+                 k1: float = K1, b: float = B) -> str:
+    """CTE ``{name}(qid, doc_id, score)``: Σ BM25 over the query-term
+    relation ``{terms}(qid, term, weight)``, optionally restricted by a
+    ``where`` clause over ``tf``."""
+    where = f"\n  WHERE {where}" if where else ""
+    return f"""{name} AS (
+  SELECT q.qid, tf.doc_id, sum({_bm25("q.weight", k1=k1, b=b)}) AS score
+  FROM {terms} q
   JOIN tf ON q.term = tf.term
   JOIN vocab v ON v.term = q.term
   JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id
-),
-topk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM scored
-)
-"""
+  CROSS JOIN stats s{where}
+  GROUP BY q.qid, tf.doc_id)"""
 
-# RM3 over the unexpanded top-FB_DOCS run (mirrors expansion/rm3.py).
-_RM3 = f"""
-fbtop AS (SELECT qid, doc_id, score FROM topk WHERE rank <= {FB_DOCS}),
+
+def _ranked(name: str, src: str, limit: int | None = None) -> str:
+    """CTE ``{name}(qid, doc_id, score, rank)`` over ``{src}(qid, doc_id,
+    score)``: rank in the engines' shared total order (score desc on
+    round(score, RANK_ROUND), doc_id asc), cut to ``rank <= limit``."""
+    cut = f" WHERE rank <= {limit}" if limit is not None else ""
+    return f"""{name} AS (
+  SELECT * FROM (
+    SELECT qid, doc_id, score,
+           row_number() OVER (PARTITION BY qid
+                              ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
+    FROM {src}){cut})"""
+
+
+def _dirichlet_scored(name: str, terms: str) -> str:
+    """CTEs ending in ``{name}(qid, doc_id, score)``: Dirichlet query
+    likelihood (mu 1600) over ``{terms}(qid, term, weight)`` for the docs
+    matching >= 1 term, Σ w·ln(1 + tf·C/(mu·cf)) + W_q·ln(mu/(dl+mu));
+    needs ``c(c_total)`` in scope."""
+    return f"""{name}_wq AS (SELECT qid, sum(weight)::DOUBLE AS w_q FROM {terms} GROUP BY qid),
+{name}_m AS (
+  SELECT q.qid, tf.doc_id,
+         sum(q.weight * ln(1.0 + tf.tf * c.c_total / (1600.0 * v.cf))) AS m,
+         min(dl.dl) AS dl
+  FROM {terms} q
+  JOIN vocab v ON v.term = q.term
+  JOIN tf ON q.term = tf.term
+  JOIN dl ON dl.doc_id = tf.doc_id
+  CROSS JOIN c
+  GROUP BY q.qid, tf.doc_id),
+{name} AS (
+  SELECT m.qid, m.doc_id, m.m + wq.w_q * ln(1600.0 / (m.dl + 1600.0)) AS score
+  FROM {name}_m m JOIN {name}_wq wq ON wq.qid = m.qid)"""
+
+
+def _rm1(topk: str) -> str:
+    """CTEs ending in ``rm1n(qid, term, weight)``: RM1 over the
+    top-FB_DOCS docs of ``{topk}(qid, doc_id, score, rank)`` (score-share
+    doc weights), cut to FB_TERMS terms with mass 1 - ORIG_W."""
+    return f"""fbtop AS (SELECT qid, doc_id, score FROM {topk} WHERE rank <= {FB_DOCS}),
 fb AS (SELECT qid, doc_id,
               score / sum(score) OVER (PARTITION BY qid) AS w_doc FROM fbtop),
 rm1 AS (
   SELECT fb.qid, tf.term, sum(fb.w_doc * tf.tf::DOUBLE / dl.dl) AS w
   FROM fb JOIN tf ON tf.doc_id = fb.doc_id JOIN dl ON dl.doc_id = fb.doc_id
-  GROUP BY fb.qid, tf.term
-),
+  GROUP BY fb.qid, tf.term),
 rm1top AS (
   SELECT * FROM (
     SELECT qid, term, w,
            row_number() OVER (PARTITION BY qid
                               ORDER BY round(w, {RANK_ROUND + 3}) DESC, term) AS rn
-    FROM rm1) WHERE rn <= {FB_TERMS}
-),
+    FROM rm1) WHERE rn <= {FB_TERMS}),
 rm1n AS (SELECT qid, term,
                 {1.0 - ORIG_W} * w / sum(w) OVER (PARTITION BY qid) AS weight
-         FROM rm1top),
+         FROM rm1top)"""
+
+
+_SCORED = _bm25_scored("scored", "qterms") + ",\n" + _ranked("topk", "scored")
+
+# RM3 over the unexpanded top-FB_DOCS run (mirrors expansion/rm3.py).
+_RM3 = _rm1("topk") + f""",
 orig AS (SELECT qid, term,
                 {ORIG_W} * weight / sum(weight) OVER (PARTITION BY qid) AS weight
          FROM qterms),
@@ -162,24 +207,8 @@ def _feature_sql(p: str, src: str, excl: str, top_t: int, n_sel: int) -> str:
     )
     t = float(top_t)
     return f"""
-{p}scored AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM {src} q
-  JOIN tf ON q.term = tf.term
-  JOIN vocab v ON v.term = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id),
-{p}topdocs AS (
-  SELECT qid, doc_id, score FROM (
-    SELECT qid, doc_id, score,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rn
-    FROM {p}scored) WHERE rn <= {top_t}),
+{_bm25_scored(f"{p}scored", src)},
+{_ranked(f"{p}topdocs", f"{p}scored", top_t)},
 {p}srct AS (SELECT DISTINCT qid, term AS orig FROM {src}),
 {p}cands AS (
   SELECT DISTINCT s.qid, s.orig, e.cand, e.df_both
@@ -2813,34 +2842,13 @@ FROM topk WHERE rank <= {TOPK}
     # to the batch build over the same docs, so same ranking)
     sql["incremental_topk"] = sql["bm25_topk"]
 
-    # Dirichlet query likelihood (method:dir, mu:1600). C = Σ cf; docs
-    # matching ≥1 query term score Σ w·ln(1 + tf·C/(mu·cf)) + W_q·ln(mu/(dl+mu)).
+    # Dirichlet query likelihood (method:dir, mu:1600)
     sql["lm_topk"] = f"""
 WITH {_BASE},
 {qterms},
 c AS (SELECT sum(cf)::DOUBLE AS c_total FROM vocab),
-wq AS (SELECT qid, sum(weight)::DOUBLE AS w_q FROM qterms GROUP BY qid),
-matched AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight * ln(1.0 + tf.tf * c.c_total / (1600.0 * v.cf))) AS m,
-         min(dl.dl) AS dl
-  FROM qterms q
-  JOIN vocab v ON v.term = q.term
-  JOIN tf ON q.term = tf.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN c
-  GROUP BY q.qid, tf.doc_id
-),
-lmscored AS (
-  SELECT m.qid, m.doc_id, m.m + wq.w_q * ln(1600.0 / (m.dl + 1600.0)) AS score
-  FROM matched m JOIN wq ON wq.qid = m.qid
-),
-lmtopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM lmscored
-)
+{_dirichlet_scored("lmscored", "qterms")},
+{_ranked("lmtopk", "lmscored")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM lmtopk WHERE rank <= {TOPK}
 """
@@ -2853,28 +2861,8 @@ FROM lmtopk WHERE rank <= {TOPK}
 WITH {_BASE},
 {qterms},
 c AS (SELECT sum(cf)::DOUBLE AS c_total FROM vocab),
-wq AS (SELECT qid, sum(weight)::DOUBLE AS w_q FROM qterms GROUP BY qid),
-matched AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight * ln(1.0 + tf.tf * c.c_total / (1600.0 * v.cf))) AS m,
-         min(dl.dl) AS dl
-  FROM qterms q
-  JOIN vocab v ON v.term = q.term
-  JOIN tf ON q.term = tf.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN c
-  GROUP BY q.qid, tf.doc_id
-),
-lmscored AS (
-  SELECT m.qid, m.doc_id, m.m + wq.w_q * ln(1600.0 / (m.dl + 1600.0)) AS score
-  FROM matched m JOIN wq ON wq.qid = m.qid
-),
-lmtopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM lmscored
-),
+{_dirichlet_scored("lmscored", "qterms")},
+{_ranked("lmtopk", "lmscored")},
 fbtop AS (SELECT qid, doc_id, score FROM lmtopk WHERE rank <= {FB_DOCS}),
 mx AS (SELECT qid, max(score) AS mxs FROM fbtop GROUP BY qid),
 fbe AS (SELECT f.qid, f.doc_id, exp(f.score - mx.mxs) AS e
@@ -2910,28 +2898,8 @@ expd AS (
   FROM (SELECT * FROM origd UNION ALL SELECT * FROM rm1n)
   GROUP BY qid, term
 ),
-wq2 AS (SELECT qid, sum(weight)::DOUBLE AS w_q FROM expd GROUP BY qid),
-matched2 AS (
-  SELECT e.qid, tf.doc_id,
-         sum(e.weight * ln(1.0 + tf.tf * c.c_total / (1600.0 * v.cf))) AS m,
-         min(dl.dl) AS dl
-  FROM expd e
-  JOIN vocab v ON v.term = e.term
-  JOIN tf ON e.term = tf.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN c
-  GROUP BY e.qid, tf.doc_id
-),
-lmscored2 AS (
-  SELECT m.qid, m.doc_id, m.m + wq2.w_q * ln(1600.0 / (m.dl + 1600.0)) AS score
-  FROM matched2 m JOIN wq2 ON wq2.qid = m.qid
-),
-lmtopk2 AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM lmscored2
-)
+{_dirichlet_scored("lmscored2", "expd")},
+{_ranked("lmtopk2", "lmscored2")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM lmtopk2 WHERE rank <= {TOPK}
 """
@@ -2967,12 +2935,7 @@ tsscored AS (
                          + 0.4 * p_t)) AS score
   FROM fullq GROUP BY qid, doc_id
 ),
-tstopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM tsscored
-)
+{_ranked("tstopk", "tsscored")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM tstopk WHERE rank <= {TOPK}
 """
@@ -2995,25 +2958,8 @@ WITH {_BASE},
 {qterms},
 {_SCORED},
 {_RM3},
-scored2 AS (
-  SELECT e.qid, tf.doc_id,
-         sum(e.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM expanded e
-  JOIN tf ON e.term = tf.term
-  JOIN vocab v ON v.term = e.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY e.qid, tf.doc_id
-),
-topk2 AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM scored2
-)
+{_bm25_scored("scored2", "expanded")},
+{_ranked("topk2", "scored2")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM topk2 WHERE rank <= {TOPK}
 """
@@ -3314,23 +3260,8 @@ mixed AS (
   SELECT qid, term, sum(weight) AS weight
   FROM (SELECT * FROM orign UNION ALL SELECT * FROM expn)
   GROUP BY qid, term),
-fin AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM mixed q
-  JOIN tf ON q.term = tf.term
-  JOIN vocab v ON v.term = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id),
-fintop AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM fin)
+{_bm25_scored("fin", "mixed")},
+{_ranked("fintop", "fin")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM fintop WHERE rank <= {TOPK}
 """
@@ -3442,24 +3373,8 @@ SELECT DISTINCT token, {stem_case} AS stem FROM inflected
     grid_blocks, grid_rows = [], []
     for gi, (gk1, gb) in enumerate(GRID_K1B):
         grid_blocks.append(f"""
-g{gi}s AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {gk1 + 1.0}
-             / (tf.tf + {gk1} * (1.0 - {gb} + {gb} * dl.dl / s.avgdl))) AS score
-  FROM qterms q
-  JOIN tf ON q.term = tf.term
-  JOIN vocab v ON v.term = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id),
-g{gi}r AS (
-  SELECT qid, doc_id, rank FROM (
-    SELECT qid, doc_id,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-    FROM g{gi}s) WHERE rank <= {TOPK}),
+{_bm25_scored(f"g{gi}s", "qterms", k1=gk1, b=gb)},
+{_ranked(f"g{gi}r", f"g{gi}s", TOPK)},
 g{gi}p AS (
   SELECT r.qid, r.rank, coalesce(qr.rel, 0) AS rel,
          sum(CASE WHEN coalesce(qr.rel, 0) > 0 THEN 1 ELSE 0 END)
@@ -3526,23 +3441,8 @@ FROM tokd GROUP BY qid, tok
 WITH {_BASE},
 tq(qid, term, weight) AS (VALUES
     {tq_vals}),
-scored2 AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM tq q
-  JOIN tf ON q.term = tf.term
-  JOIN vocab v ON v.term = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  GROUP BY q.qid, tf.doc_id),
-topk2 AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM scored2)
+{_bm25_scored("scored2", "tq")},
+{_ranked("topk2", "scored2")}
 SELECT qid, doc_id::VARCHAR AS docno, rank::BIGINT AS rank,
        round(score, 6) AS score
 FROM topk2 WHERE rank <= {TOPK}
@@ -3551,25 +3451,8 @@ FROM topk2 WHERE rank <= {TOPK}
     sql["working_set_rescore"] = f"""
 WITH {_BASE},
 {_qterms_cte()},
-scored_ws AS (
-  SELECT q.qid, tf.doc_id,
-         sum(q.weight
-             * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-             * tf.tf * {K1 + 1.0}
-             / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))) AS score
-  FROM qterms q
-  JOIN tf ON q.term = tf.term
-  JOIN vocab v ON v.term = q.term
-  JOIN dl ON dl.doc_id = tf.doc_id
-  CROSS JOIN stats s
-  WHERE tf.doc_id < {WORKING_SET_MAX_DOC}
-  GROUP BY q.qid, tf.doc_id
-),
-topk_ws AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM scored_ws)
+{_bm25_scored("scored_ws", "qterms", f"tf.doc_id < {WORKING_SET_MAX_DOC}")},
+{_ranked("topk_ws", "scored_ws")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM topk_ws WHERE rank <= 5
 """
@@ -3625,11 +3508,6 @@ FROM (
     # The 2-term #uwN count equals the number of CONSECUTIVE events in
     # the merged (a|b) position stream with differing terms and span ≤ N
     # (left-minimal covering windows) — expressible with lag().
-    _BM25 = (
-        "{w} * ln(1.0 + (s.n_docs - {df} + 0.5) / ({df} + 0.5)) "
-        f"* {{tf}} * {K1 + 1.0} "
-        f"/ ({{tf}} + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl))"
-    )
     pw_ctes, pw_contribs = [], []
     for qid in sorted(CONCEPT_PHRASES):
         a, b = CONCEPT_PHRASES[qid].split()
@@ -3658,9 +3536,9 @@ uw_{qid} AS (
   GROUP BY doc_id),
 uwp_{qid} AS (SELECT doc_id, tf FROM uw_{qid} WHERE tf > 0),
 uwdf_{qid} AS (SELECT count(*)::DOUBLE AS df FROM uwp_{qid})""")
-        t_expr = _BM25.format(w=W_TERM / 2.0, df="v.df", tf="tf.tf")
-        od_expr = _BM25.format(w=W_OD, df="f.df", tf="p.tf")
-        uw_expr = _BM25.format(w=W_UW, df="f.df", tf="p.tf")
+        t_expr = _bm25(W_TERM / 2.0)
+        od_expr = _bm25(W_OD, tf="p.tf", df="f.df")
+        uw_expr = _bm25(W_UW, tf="p.tf", df="f.df")
         pw_contribs.append(f"""
   SELECT '{qid}' AS qid, tf.doc_id, {t_expr} AS contrib
   FROM tf JOIN vocab v USING (term) JOIN dl USING (doc_id) CROSS JOIN stats s
@@ -3676,11 +3554,7 @@ WITH {_BASE},{",".join(pw_ctes)},
 contribs AS ({" UNION ALL ".join(pw_contribs)}),
 pscored AS (
   SELECT qid, doc_id, sum(contrib) AS score FROM contribs GROUP BY qid, doc_id),
-ptopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM pscored)
+{_ranked("ptopk", "pscored")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM ptopk WHERE rank <= {TOPK}
 """
@@ -3698,43 +3572,18 @@ WITH {_BASE},{",".join(pw_ctes)},
 contribs AS ({" UNION ALL ".join(pw_contribs)}),
 pscored AS (
   SELECT qid, doc_id, sum(contrib) AS score FROM contribs GROUP BY qid, doc_id),
-ptopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM pscored),
-fbtop AS (SELECT qid, doc_id, score FROM ptopk WHERE rank <= {FB_DOCS}),
-fb AS (SELECT qid, doc_id,
-              score / sum(score) OVER (PARTITION BY qid) AS w_doc FROM fbtop),
-rm1 AS (
-  SELECT fb.qid, tf.term, sum(fb.w_doc * tf.tf::DOUBLE / dl.dl) AS w
-  FROM fb JOIN tf ON tf.doc_id = fb.doc_id JOIN dl ON dl.doc_id = fb.doc_id
-  GROUP BY fb.qid, tf.term),
-rm1top AS (
-  SELECT * FROM (
-    SELECT qid, term, w,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY round(w, {RANK_ROUND + 3}) DESC, term) AS rn
-    FROM rm1) WHERE rn <= {FB_TERMS}),
-rm1n AS (SELECT qid, term,
-                {1.0 - ORIG_W} * w / sum(w) OVER (PARTITION BY qid) AS weight
-         FROM rm1top),
+{_ranked("ptopk", "pscored")},
+{_rm1("ptopk")},
 expc AS (
   SELECT r.qid, tf.doc_id,
-         r.weight * ln(1.0 + (s.n_docs - v.df + 0.5) / (v.df + 0.5))
-         * tf.tf * {K1 + 1.0}
-         / (tf.tf + {K1} * (1.0 - {B} + {B} * dl.dl / s.avgdl)) AS c
+         {_bm25("r.weight")} AS c
   FROM rm1n r JOIN tf ON tf.term = r.term JOIN vocab v ON v.term = r.term
   JOIN dl ON dl.doc_id = tf.doc_id CROSS JOIN stats s),
 pfinal AS (
   SELECT qid, doc_id, sum(c) AS score FROM (
     SELECT qid, doc_id, {ORIG_W} * score AS c FROM pscored
     UNION ALL SELECT qid, doc_id, c FROM expc) GROUP BY qid, doc_id),
-pftopk AS (
-  SELECT qid, doc_id, score,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(score, {RANK_ROUND}) DESC, doc_id) AS rank
-  FROM pfinal)
+{_ranked("pftopk", "pfinal")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM pftopk WHERE rank <= {TOPK}
 """

@@ -29,7 +29,7 @@ stemming on or off.
 from __future__ import annotations
 
 import re
-from typing import Iterable, List
+from typing import List
 
 import pandas as pd
 from pyspark.sql import Column
@@ -93,10 +93,6 @@ def stem_py(token: str) -> str:
     return t
 
 
-def stem_tokens_py(tokens: Iterable[str]) -> List[str]:
-    return [stem_py(t) for t in tokens]
-
-
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def stem_tokens(series: pd.Series) -> pd.Series:
     """Vectorized (Arrow-batched) stemming of token arrays."""
@@ -130,46 +126,6 @@ def extract_text_py(html: bytes) -> str:
 def extract_text(html: pd.Series) -> pd.Series:
     """Arrow-batched HTML→text extraction (Series[bytes] → Series[str])."""
     return html.map(extract_text_py)
-
-
-# ---------------------------------------------------------------------------
-# Per-row term frequencies WITHOUT a shuffle.
-#
-# The naive plan (explode → groupBy(doc_id, term).count()) shuffles every
-# (doc, term) pair once just to compute tf, and then a second time to group
-# by term. Computing tf inside the row removes the first shuffle entirely —
-# at 100 TB that is the difference between one and two full-data exchanges.
-# ---------------------------------------------------------------------------
-
-_TERM_TF_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("term", T.StringType()),
-            T.StructField("tf", T.IntegerType()),
-        ]
-    )
-)
-
-
-@F.pandas_udf(_TERM_TF_TYPE)
-def term_frequencies_udf(tokens: pd.Series) -> pd.Series:
-    """array<string> → array<struct<term,tf>> per row (Arrow-batched).
-
-    Reference implementation; the engine uses :func:`term_frequencies`
-    (pure column functions) — measured 2-6× faster because the Python
-    per-token dict loop is allocation-bound and anti-scales under many
-    concurrent workers.
-    """
-
-    def counts(toks):
-        if toks is None:
-            return []
-        d: dict = {}
-        for t in toks:
-            d[t] = d.get(t, 0) + 1
-        return [{"term": k, "tf": v} for k, v in d.items()]
-
-    return tokens.map(counts)
 
 
 def bigrams_col(tokens) -> Column:

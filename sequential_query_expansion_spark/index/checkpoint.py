@@ -153,6 +153,9 @@ def build_index_checkpointed(
             os.path.join(out_dir, "doc_len")
         )
         idx.vocab.write.mode("overwrite").parquet(os.path.join(out_dir, "vocab"))
+        # every later stage reads the checkpoint, not these caches
+        for cached in (idx.doc_terms, idx.postings_flat, idx.vocab):
+            cached.unpersist()
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(
                 {

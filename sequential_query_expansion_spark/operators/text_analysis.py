@@ -37,10 +37,6 @@ def _norm_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), "[^a-z0-9]+", " "))
 
 
-def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("tokens", tokenize_col(F.col(text_col)))
-
-
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(doc_id, n_tokens, n_unique, n_chars_norm)."""
     toks = tokenize_col(F.col(text_col))

@@ -100,18 +100,6 @@ def score_topk(
     )
 
 
-def score_topk_weighted(
-    index: IndexTables,
-    weighted_terms: DataFrame,
-    k: int = 10,
-    k1: float = K1,
-    b: float = B,
-) -> DataFrame:
-    """Same join, but weights come from an expansion model —
-    weighted_terms(qid, term, weight). This is `#weight(...)`."""
-    return score_topk(index, weighted_terms, k=k, k1=k1, b=b)
-
-
 def score_topk_working_set(
     index: IndexTables,
     query_terms: DataFrame,

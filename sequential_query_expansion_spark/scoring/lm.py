@@ -129,13 +129,13 @@ def two_stage_topk(
 
     # restrict postings to the query vocabulary FIRST (broadcast semi
     # join into the scan): every later join touches only candidate-sized
-    # data — the full postings table never shuffles
+    # data — the full postings table never shuffles. Not persisted: no
+    # caller could release the cache, so the plan reads it twice instead
     pairs = (
         index.postings_flat.join(
             F.broadcast(qt.select("qid", "term").distinct()), "term"
         )
         .select("qid", "term", "doc_id", "tf", "dl")
-        .persist()
     )
     cands = pairs.groupBy("qid", "doc_id").agg(F.first("dl").alias("dl"))
     full = (
@@ -156,9 +156,4 @@ def two_stage_topk(
     scored = full.groupBy("qid", "doc_id").agg(
         F.sum(F.col("weight") * F.log(p_td)).alias("score")
     )
-    out = _windowed_topk(scored, index, k, rank_round)
-    # let eager callers (QueryService) release the candidate cache once
-    # the result is materialized — a long-lived serving session would
-    # otherwise accumulate one persisted DataFrame per query
-    out._sqe_intermediates = [pairs]
-    return out
+    return _windowed_topk(scored, index, k, rank_round)

@@ -3,7 +3,7 @@
 The reference answers queries with a long-lived IndriRunQuery process
 that memory-maps its index files (configs/*/indriRunQuery.cfg,
 umls/umlsSeqPubMed.ipynb:31348) — per-query cost is a few posting-list
-reads, never a cluster job. The Spark-side analogue (scoring/service.py)
+reads, never a cluster job. A per-query Spark plan (scoring/bm25.py)
 is floor-bound by job scheduling (~0.5 s/query on local[32] regardless
 of corpus size). ``LocalSearcher`` closes that gap: it reads the SAME
 checkpointed index the Spark jobs write (index/checkpoint.py layout) and
@@ -20,7 +20,7 @@ Why this is the right 100 TB architecture and not a local-mode hack:
 - scoring reuses the numpy block-max WAND kernel (scoring/wand.py
   ``_wand_kernel``) byte-for-byte, so serving results are
   rank-identical to ``wand_topk`` / ``score_topk`` by construction —
-  one kernel, three surfaces (batch Spark, QueryService, serving tier);
+  one kernel, two surfaces (batch Spark, serving tier);
 - Spark stays the system of record: builds, merges, compacts and
   deletes go through the cluster; any number of stateless searcher
   replicas mount the index read-only (the validate_index_dir gate

@@ -74,14 +74,41 @@ def test_lineage_metrics_written(spark, docs_df, tmp_path_factory):
     assert m.filter(F.col("rows") <= 0).count() == 0
 
 
-def test_loaded_index_queries(spark, docs_df, tmp_path_factory, tiny_corpus):
+def _persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+@pytest.fixture(scope="module")
+def built_index(spark, docs_df, tmp_path_factory):
+    """A checkpointed build loaded back from disk, and the number of
+    persisted RDDs the build left behind."""
+    docs_df.count()  # the fixture's own cache counts as already there
+    before = _persisted_rdds(spark)
+    out = str(tmp_path_factory.mktemp("idx_load"))
+    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8)
+    return cp.load_index(spark, out), _persisted_rdds(spark) - before
+
+
+def test_loaded_index_queries(spark, built_index, tiny_corpus):
     from sequential_query_expansion_spark.scoring.bm25 import (
         query_term_table, score_topk,
     )
 
-    out = str(tmp_path_factory.mktemp("idx_load"))
-    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8)
-    idx = cp.load_index(spark, out)
     qdf = spark.createDataFrame(tiny_corpus.queries)
-    res = score_topk(idx, query_term_table(qdf), k=5)
+    res = score_topk(built_index[0], query_term_table(qdf), k=5)
     assert res.count() > 0
+
+
+@pytest.mark.parametrize("case", ["build_index_checkpointed", "two_stage_topk"])
+def test_leaves_no_persisted_rdds(spark, built_index, tiny_corpus, case):
+    from sequential_query_expansion_spark.scoring.bm25 import query_term_table
+    from sequential_query_expansion_spark.scoring.lm import two_stage_topk
+
+    idx, build_leaked = built_index
+    if case == "build_index_checkpointed":
+        assert build_leaked == 0
+    else:
+        qt = query_term_table(spark.createDataFrame(tiny_corpus.queries))
+        before = _persisted_rdds(spark)
+        assert two_stage_topk(idx, qt, k=5).count() > 0
+        assert _persisted_rdds(spark) == before
