@@ -139,22 +139,29 @@ def main() -> int:
         )
         d = d.join(flagged, idc, "left_anti")
 
-    # cut the lineage once: pack_sequences checkpoints its own input and
-    # the final join re-reads samp — without this the full upstream
-    # chain executes twice
+    # persisted: pack_sequences and the final join both read samp —
+    # without the cache the full upstream chain executes twice. The job
+    # owns every cache it and pack_sequences make, and releases them
+    # once the output is written.
     samp = training_prep.mixture_sample(
         d, rates, default_rate=args.default_rate, id_col=idc, salt=args.salt,
-    ).localCheckpoint()
-    packed = training_prep.pack_sequences(
-        samp.select(idc, "n_tokens"), capacity=args.capacity, id_col=idc
-    )
-    out = packed.join(
-        samp.select(idc, "source", "sample_weight", "text"), idc
-    ).select(
-        idc, "source", "n_tokens", "sample_weight",
-        "start_tok", "bin_id", "overflow", "text",
-    )
-    out.write.mode("overwrite").parquet(args.output)
+    ).persist()
+    caches = [samp]
+    try:
+        packed = training_prep.pack_sequences(
+            samp.select(idc, "n_tokens"), capacity=args.capacity, id_col=idc,
+            caches=caches,
+        )
+        out = packed.join(
+            samp.select(idc, "source", "sample_weight", "text"), idc
+        ).select(
+            idc, "source", "n_tokens", "sample_weight",
+            "start_tok", "bin_id", "overflow", "text",
+        )
+        out.write.mode("overwrite").parquet(args.output)
+    finally:
+        for df in caches:
+            df.unpersist()
 
     # summary reads the (small) OUTPUT only — no extra pass over the
     # input table just for a log line

@@ -91,6 +91,7 @@ def main() -> int:
         from sequential_query_expansion_spark.scoring.phrase import (
             phrase_clauses_df, phrase_rm3_topk, phrase_weighted_topk,
         )
+        from sequential_query_expansion_spark.util import local_frame
 
         # parse once, feed the clause tables to the scorer directly
         tmap = {r["qid"]: r["text"] for r in topics.collect()}
@@ -100,8 +101,8 @@ def main() -> int:
                 "--indri with #odN/#uwN operators requires an index "
                 "published with --with-positions"
             )
-        tc = spark.createDataFrame(
-            term_rows, "qid string, term string, weight double"
+        tc = local_frame(
+            spark, term_rows, "qid string, term string, weight double"
         )
         pc = phrase_clauses_df(spark, phrase_rows) if phrase_rows else None
         if args.rm3:

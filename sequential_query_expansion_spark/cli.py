@@ -67,6 +67,7 @@ from pyspark.sql import functions as F
 from .index.checkpoint import load_index
 from .scoring.bm25 import query_term_table, score_topk
 from .session import get_spark
+from .util import local_frame
 
 
 def _docs_table(spark, index_dir: str):
@@ -372,8 +373,8 @@ def main(argv=None) -> int:
         print("VALID" if ok else "INVALID")
         return 0 if ok else 1
     elif cmd == "q":
-        queries = spark.createDataFrame(
-            [("cli", " ".join(args))], "qid string, text string"
+        queries = local_frame(
+            spark, [("cli", " ".join(args))], "qid string, text string"
         )
         score_topk(idx, query_term_table(queries), k=10).orderBy("rank").show(
             truncate=False

@@ -28,6 +28,7 @@ from .functions.text import TOKENIZE_SQL_DUCKDB, tokenize_col
 from .index.build import K1, B
 from .operators import dedup, similarity, text_analysis
 from .scoring.bm25 import query_term_table, score_topk
+from .util import local_frame
 from .webtext import (
     WEB_QUERIES,
     cooccur_edges,
@@ -531,8 +532,8 @@ def _local_searcher_run(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
             res = searcher.topk(qmap[qid], k=TOPK, rank_round=RANK_ROUND)
         for rank, (doc_id, score) in enumerate(res, 1):
             rows.append((qid, doc_id, rank, round(score, SCORE_ROUND)))
-    return spark.createDataFrame(
-        rows, "qid string, doc_id long, rank long, score double"
+    return local_frame(
+        spark, rows, "qid string, doc_id long, rank long, score double"
     )
 
 
@@ -586,8 +587,8 @@ def q_local_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     rank_round=RANK_ROUND)
         for rank, (doc_id, score) in enumerate(res, 1):
             rows.append((qid, doc_id, rank, round(score, SCORE_ROUND)))
-    return spark.createDataFrame(
-        rows, "qid string, doc_id long, rank long, score double"
+    return local_frame(
+        spark, rows, "qid string, doc_id long, rank long, score double"
     )
 
 
@@ -644,8 +645,8 @@ def q_local_indri_rm3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for rank, (doc_id, score) in enumerate(res, 1):
             rows.append((qid, doc_id, rank, round(score, SCORE_ROUND)))
-    return spark.createDataFrame(
-        rows, "qid string, doc_id long, rank long, score double"
+    return local_frame(
+        spark, rows, "qid string, doc_id long, rank long, score double"
     )
 
 
@@ -808,7 +809,8 @@ def q_grid_search_map(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if r["qid"].startswith(f"g{i}|")]
         rows.append((float(k1), float(b), round(sum(vals) / len(vals), 6)))
     rows.sort(key=lambda r: (-r[2], r[0]))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k1, b, m, i + 1) for i, (k1, b, m) in enumerate(rows)],
         "k1 double, b double, map double, rank long",
     )
@@ -857,7 +859,8 @@ def q_cooccur_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hop co-occurrence expansion: J1 graph lookup + A1 mutual-count
     filter + F5 orig-term exclusion + T1 top-N, over the corpus itself."""
     idx = doc_index(spark, sf_dir)
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(q, t) for q, t, _ in query_term_rows()], "qid string, term string"
     ).distinct()
     qdocs = (
@@ -928,8 +931,8 @@ def q_feature_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank = rank + 1 if r["qid"] == prev_qid else 1
         prev_qid = r["qid"]
         out.append((r["qid"], r["cand"], round(r["weight"], SCORE_ROUND), rank))
-    return spark.createDataFrame(
-        out, "qid string, cand string, weight double, rank long"
+    return local_frame(
+        spark, out, "qid string, cand string, weight double, rank long"
     )
 
 
@@ -1121,7 +1124,8 @@ def q_umls_concept_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = sty_whitelist_filter(
         read_mrrel(spark, f"{d}/MRREL.RRF"), sty, GOOD_TUIS
     )
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(q, t) for q, t, _ in query_term_rows()], "qid string, term string"
     ).distinct()
     qcui = qt.join(names.withColumnRenamed("name", "term"), "term")
@@ -1216,7 +1220,8 @@ def q_live_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         mt.compact_index(spark, d, codec="pfor")
         state["compacted"] = True
     rows += run_rows(load_index(spark, d), True, "compacted")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "qid string, doc_id long, rank long, score double, phase string",
     )
@@ -1558,7 +1563,7 @@ def q_training_set_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d5 = d4.join(flagged, "doc_id", "left_anti")
     # 6. mixture sampling by source (source rejoined from the corpus).
-    # localCheckpoint: both pack_sequences (via its own checkpoint) and
+    # localCheckpoint: both pack_sequences (via its own cache) and
     # the final join consume samp — without the cut the whole 6-stage
     # lineage executes twice (measured 10.2 s -> ~6 s at sf0.1)
     samp = training_prep.mixture_sample(
@@ -1779,8 +1784,8 @@ def q_indri_cfg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .indriql import parse_indri_query
     from .sources.trec import write_indri_cfg
 
-    qt = spark.createDataFrame(
-        indri_cfg_query_rows(), "qid string, term string, weight double"
+    qt = local_frame(
+        spark, indri_cfg_query_rows(), "qid string, term string, weight double"
     )
     path = tempfile.mkdtemp(prefix="sqe_cfg_") + "/queries.cfg"
     write_indri_cfg(qt, path)
@@ -1793,7 +1798,7 @@ def q_indri_cfg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         qid, text = m.group(1), m.group(2)
         for term, w in parse_indri_query(text)[0]:
             rows.append((qid, term, round(w, 6)))
-    return spark.createDataFrame(rows, "qid string, term string, weight double")
+    return local_frame(spark, rows, "qid string, term string, weight double")
 
 
 def q_trec_run_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2135,8 +2140,8 @@ def q_ivf_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in sorted(counts):
         for d in range(EMB_DIM):
             out.append((b, counts[b], d, round(float(cents[b][d]), 5)))
-    return spark.createDataFrame(
-        out, "bucket long, n long, dim long, c double"
+    return local_frame(
+        spark, out, "bucket long, n long, dim long, c double"
     )
 
 
@@ -2166,8 +2171,8 @@ def q_ivf_train_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             # half boundaries, where Python (half-to-even) and DuckDB
             # (half-away) tie-break differently (52/1024 diverged)
             out.append((b, counts[b], d, float(cents[b][d])))
-    return spark.createDataFrame(
-        out, "bucket long, n long, dim long, c double"
+    return local_frame(
+        spark, out, "bucket long, n long, dim long, c double"
     )
 
 
@@ -2220,8 +2225,8 @@ def q_pq_train_step(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(
                 (j, code, counts[(j, code)], d, round(float(cbs[j, code, d]), 5))
             )
-    return spark.createDataFrame(
-        out, "j long, code long, n long, dim long, c double"
+    return local_frame(
+        spark, out, "j long, code long, n long, dim long, c double"
     )
 
 
@@ -2253,8 +2258,8 @@ def q_pq_train_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
             out.append(
                 (j, code, counts[(j, code)], d, float(cbs[j, code, d]))
             )
-    return spark.createDataFrame(
-        out, "j long, code long, n long, dim long, c double"
+    return local_frame(
+        spark, out, "j long, code long, n long, dim long, c double"
     )
 
 
@@ -2504,7 +2509,8 @@ def q_streaming_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(work, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "host string, n_pages long, n_kept long, mean_tokens double"
     )
 

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..index.build import IndexTables
 from ..scoring.bm25 import score_topk
+from ..util import local_frame
 
 FEATURES: List[str] = [
     "expTDocScore", "topTermFrac", "numCanDocs", "avgCDocScore",
@@ -113,13 +114,15 @@ def concept_features(
     the layered loop would otherwise accumulate per-layer cached
     partitions across iterations (executor memory at scale).
 
-    The three per-layer driver sets — feedback docs, candidate edges,
-    per-term df — are bounded by queries × top_t / queries × edges and
-    do NOT grow with the corpus, so they are materialized driver-side
-    once: every consumer below then broadcasts a LocalTableScan instead
-    of re-reading a persisted subtree through its own broadcast-exchange
-    sub-job (~12 such sites; their scheduling latency dominated this
-    pass's wall-clock at every tested scale). All postings consumers
+    The per-layer driver sets — feedback docs, candidate edges and the
+    output features — are bounded by queries × top_t / queries × edges
+    and do NOT grow with the corpus, so they are materialized
+    driver-side once and sent back through ``util.local_frame``: every
+    consumer below then broadcasts a LocalTableScan (a ``LocalRelation``
+    in the optimized plan, no Python task) instead of re-reading a
+    persisted subtree through its own broadcast-exchange sub-job (~12
+    such sites; their scheduling latency dominated this pass's
+    wall-clock at every tested scale). All postings consumers
     share ONE term-pruned scan (`pf_sub`) — at web scale that filter is
     the bucket/partition prune, and it is the only big-table read here
     besides the feedback BM25 pass."""
@@ -146,21 +149,23 @@ def concept_features(
         )
         topdoc_rows = fut_top.result()
         cand_rows = fut_cand.result()
-    topdocs = spark.createDataFrame(
+    topdocs = local_frame(
+        spark,
         [(r["qid"], r["doc_id"], r["score"]) for r in topdoc_rows],
         "qid string, doc_id long, score double",
     )
     top_dl_sum: Dict[str, int] = {}
     for r in topdoc_rows:
         top_dl_sum[r["qid"]] = top_dl_sum.get(r["qid"], 0) + r["dl"]
-    cands = spark.createDataFrame(
-        cand_rows, "qid string, orig string, cand string, n_links long"
+    cands = local_frame(
+        spark, cand_rows, "qid string, orig string, cand string, n_links long"
     )
     term_set = sorted(
         {r["cand"] for r in cand_rows} | {r["orig"] for r in cand_rows}
     )
     if not term_set:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "qid string, cand string, "
             + ", ".join(f"{f} double" for f in FEATURES),
@@ -298,7 +303,8 @@ def concept_features(
         out_rows.append(
             (q, c) + tuple(_clean(feat[name]) for name in FEATURES)
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out_rows,
         "qid string, cand string, "
         + ", ".join(f"{name} double" for name in FEATURES),
@@ -370,7 +376,7 @@ def sequential_expand(
     # into an hours-long analysis/execution). So the state lives in the
     # driver: the earlier-layer exclusion is a set lookup instead of an
     # anti-join, and each layer's sources feed concept_features as a
-    # LocalTableScan.
+    # LocalRelation (util.local_frame).
     out_rows = [
         (r["qid"], r["term"], float(r["weight"]), 0)
         for r in query_terms.select("qid", "term", "weight").collect()
@@ -378,8 +384,8 @@ def sequential_expand(
     seen = {(q, t) for q, t, _, _ in out_rows}
     src_rows = [(q, t, w) for q, t, w, _ in out_rows]
     for ell in range(1, layers + 1):
-        sources = spark.createDataFrame(
-            src_rows, "qid string, term string, weight double"
+        sources = local_frame(
+            spark, src_rows, "qid string, term string, weight double"
         )
         layer_caches: list = []
         feats = concept_features(
@@ -405,8 +411,8 @@ def sequential_expand(
             seen.add((r["qid"], r["cand"]))
             out_rows.append((r["qid"], r["cand"], lw * r["weight"], ell))
             src_rows.append((r["qid"], r["cand"], 1.0))
-    return spark.createDataFrame(
-        out_rows, "qid string, term string, weight double, layer int"
+    return local_frame(
+        spark, out_rows, "qid string, term string, weight double, layer int"
     )
 
 
@@ -448,7 +454,8 @@ def expanded_topk(
             w = 0.0
         key = (r["qid"], r["term"])
         mixed[key] = mixed.get(key, 0.0) + w
-    mixed_df = exp.sparkSession.createDataFrame(
+    mixed_df = local_frame(
+        exp.sparkSession,
         [(q, t, w) for (q, t), w in sorted(mixed.items())],
         "qid string, term string, weight double",
     )

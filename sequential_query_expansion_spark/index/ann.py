@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import similarity as sim
+from ..util import local_frame
 
 _FMT_VERSION = 1
 
@@ -264,8 +265,8 @@ def query_ivfpq(
     lut_rows = sim._ivfpq_probe_luts(
         probe_rows, centroids, codebooks, nprobe, score_round
     )
-    p = spark.createDataFrame(
-        lut_rows, "probe_id long, bucket int, lut array<array<bigint>>"
+    p = local_frame(
+        spark, lut_rows, "probe_id long, bucket int, lut array<array<bigint>>"
     )
     probed = sorted({b for _, b, _ in lut_rows})
     coded = _code_frames(

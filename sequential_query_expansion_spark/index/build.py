@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import explode_term_frequencies, stem_tokens, tokenize_col
+from ..util import local_frame
 from .codec import encode_block
 
 BLOCK_SIZE = 128
@@ -93,7 +94,8 @@ def assign_doc_ids(pages: DataFrame, num_partitions: int | None = None) -> DataF
     for row in counts:
         offsets[row["pid"]] = acc
         acc += row["count"]
-    off_df = spark.createDataFrame(
+    off_df = local_frame(
+        spark,
         [(int(p), int(o)) for p, o in offsets.items()], "pid int, offset long"
     )
     w = F.row_number().over(Window.partitionBy("pid").orderBy("url"))

@@ -43,6 +43,7 @@ from .checkpoint import (
     _save_manifest,
     load_index,
 )
+from ..util import local_frame
 
 _TOMB = "tombstones"
 
@@ -58,8 +59,8 @@ def delete_docs(spark: SparkSession, out_dir: str, doc_ids) -> None:
     if isinstance(doc_ids, DataFrame):
         df = doc_ids.select(F.col("doc_id").cast("long"))
     else:
-        df = spark.createDataFrame(
-            [(int(d),) for d in doc_ids], "doc_id long"
+        df = local_frame(
+            spark, [(int(d),) for d in doc_ids], "doc_id long"
         )
     df.write.mode("append").parquet(_tomb_path(out_dir))
 
@@ -227,7 +228,8 @@ def compact_index(spark: SparkSession, out_dir: str,
         _rewrite_buckets(spark, flat_root, affected, tomb)
         _append_metrics(
             spark, out_dir, "compact_flat",
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(b, 1) for b in affected] or [(-1, 0)],
                 "partition_id int, rows long",
             ),
@@ -513,7 +515,8 @@ def merge_indexes(
     )
     _append_metrics(
         spark, out_dir, "merge",
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, int(s["n_docs"])) for i, s in enumerate(all_stats)],
             "partition_id int, rows long",
         ),

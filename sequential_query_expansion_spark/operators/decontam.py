@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokenize_col
+from ..util import local_frame
 from .dedup import _shingle_col
 
 
@@ -62,21 +63,26 @@ def ngram_overlap(
     """
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    # the bench side is small by design (it gets broadcast below);
-    # localCheckpoint so the eager guard count and the gram build read
-    # one materialization instead of executing the bench lineage twice.
-    # coalesce: a NULL text tokenizes to NULL, which `< n` would let
-    # slip past the guard — exactly the silent hole being closed.
-    bench = bench.localCheckpoint()
-    n_short = bench.filter(
-        F.coalesce(F.size(tokenize_col(F.col(bench_text_col))), F.lit(0)) < n
-    ).count()
+    # the bench side is small by design (it gets broadcast below): ONE
+    # collect feeds the guard, and the rows go back as a local table, so
+    # the gram build never executes the bench lineage again and nothing
+    # stays persisted. coalesce: a NULL text tokenizes to NULL, which
+    # `< n` would let slip past the guard — exactly the silent hole
+    # being closed.
+    items = bench.select(bench_id_col, bench_text_col)
+    rows = items.withColumn(
+        "_n", F.coalesce(F.size(tokenize_col(F.col(bench_text_col))), F.lit(0))
+    ).collect()
+    n_short = sum(r["_n"] < n for r in rows)
     if n_short:
         raise ValueError(
             f"{n_short} bench item(s) have fewer than n={n} tokens and "
             "would silently never match any document; lower n or "
             "pre-filter them"
         )
+    bench = local_frame(
+        bench.sparkSession, [r[:2] for r in rows], items.schema.toDDL()
+    )
     bench_g = _distinct_grams(bench, bench_id_col, bench_text_col, n, "bench_id")
     totals = bench_g.groupBy("bench_id").agg(
         F.count("*").alias("bench_ngrams")

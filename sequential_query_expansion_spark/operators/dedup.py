@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokenize_col
-from ..util import ensure_parallelism
+from ..util import ensure_parallelism, local_frame
 from .text_analysis import fingerprint
 
 # MinHash parameters (fixed so signatures are comparable across runs).
@@ -443,8 +443,8 @@ def lsh_candidates(
     """
     sig_len_row = signatures.select(F.size("sig").alias("n")).head()
     if sig_len_row is None:
-        return signatures.sparkSession.createDataFrame(
-            [], "doc_a long, doc_b long"
+        return local_frame(
+            signatures.sparkSession, [], "doc_a long, doc_b long"
         )
     rows_per_band = max(1, sig_len_row["n"] // bands)
 

@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -650,7 +652,8 @@ def pq_lut(probe_vec: np.ndarray, codebooks: np.ndarray,
 
 
 def _probe_vec_df(spark, probe_rows):
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["probe_id"], [float(x) for x in r["p_vec"]])
          for r in probe_rows],
         "probe_id long, p_vec array<double>",
@@ -783,8 +786,8 @@ def pq_topk_adc(
           for row in pq_lut(r["p_vec"], codebooks, score_round)])
         for r in probe_rows
     ]
-    p = spark.createDataFrame(
-        lut_rows, "probe_id long, lut array<array<bigint>>"
+    p = local_frame(
+        spark, lut_rows, "probe_id long, lut array<array<bigint>>"
     )
     return _adc_rank_topk(
         spark, coded, p, k, on_bucket=False, refine=refine,
@@ -1001,7 +1004,8 @@ def ivfpq_topk(
         F.col(probe_id_col).alias("probe_id"), F.col(vec_col).alias("p_vec")
     ).collect()  # probe side only — never the corpus
     spark = embeddings.sparkSession
-    p = spark.createDataFrame(
+    p = local_frame(
+        spark,
         _ivfpq_probe_luts(probe_rows, centroids, codebooks, nprobe,
                           score_round),
         "probe_id long, bucket int, lut array<array<bigint>>",

@@ -20,6 +20,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..util import local_frame
+
 HASH_MOD = 16 ** 6  # first 6 md5 hex chars -> uniform int in [0, 2^24)
 
 
@@ -73,6 +75,7 @@ def pack_sequences(
     capacity: int,
     id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
+    caches: list | None = None,
 ) -> DataFrame:
     """Assign documents (in ``id_col`` order) to fixed-capacity token
     bins: a document belongs to the bin where its global token offset
@@ -90,21 +93,39 @@ def pack_sequences(
     offsets back, and window only WITHIN partitions. The output is
     invariant to the (sampled, run-varying) range boundaries because
     offset + local cumsum telescopes to the global cumsum.
+
+    Refuses rows whose ``tokens_col`` is NULL: they would get a NULL
+    start offset, and a partition of only NULLs has no token sum.
+    ``caches``: if given, the range-partitioned input this pass
+    persists is appended so the caller can unpersist it once the
+    output is written.
     """
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
+    # persisted, so the sums below and the windows after them see the
+    # SAME range boundaries (range partitioning samples its input)
     d = docs.select(id_col, tokens_col).repartitionByRange(F.col(id_col))
-    d = d.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
-    psums = {
-        r["_pid"]: r["s"]
-        for r in d.groupBy("_pid").agg(F.sum(tokens_col).alias("s")).collect()
-    }
+    d = d.withColumn("_pid", F.spark_partition_id()).persist()
+    stats = d.groupBy("_pid").agg(
+        F.sum(tokens_col).alias("s"),
+        F.sum(F.col(tokens_col).isNull().cast("long")).alias("n_null"),
+    ).collect()
+    n_null = sum(r["n_null"] for r in stats)
+    if n_null:
+        d.unpersist()
+        raise ValueError(
+            f"{n_null} row(s) have a NULL {tokens_col!r}; packing needs a "
+            "token count for every document"
+        )
+    if caches is not None:
+        caches.append(d)
+    psums = {r["_pid"]: r["s"] for r in stats}
     offsets, acc = [], 0
     for pid in sorted(psums):  # range partitions ascend with pid
         offsets.append((pid, acc))
         acc += int(psums[pid])
     off = F.broadcast(
-        docs.sparkSession.createDataFrame(offsets, "_pid int, _off long")
+        local_frame(docs.sparkSession, offsets, "_pid int, _off long")
     )
     # explicit ROWS frame: the default RANGE frame would sum PEER rows
     # (duplicate ids) into both peers' cumsums, diverging from the

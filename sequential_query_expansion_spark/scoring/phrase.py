@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..functions.positional import od_count_positions
 from ..index.build import IndexTables, K1, B
 from ..index.positions import _uw_from_positions
+from ..util import local_frame
 from .bm25 import bm25_score_expr
 
 # Indri convention used by the reference: unordered window width scales
@@ -99,7 +100,8 @@ def render_concept_clauses(
 
 
 def phrase_clauses_df(spark: SparkSession, phrase_rows: List[tuple]) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         phrase_rows,
         "qid string, clause_id string, terms array<string>, n int, "
         "ordered boolean, weight double",
@@ -260,8 +262,8 @@ def concept_query_topk(
     """Convenience: {qid: phrase} -> top-k via the reference's rendering
     (0.8 terms / 0.1 od bigrams / 0.1 uw window)."""
     term_rows, phrase_rows = render_concept_clauses(sorted(concepts.items()))
-    tc = spark.createDataFrame(
-        term_rows, "qid string, term string, weight double"
+    tc = local_frame(
+        spark, term_rows, "qid string, term string, weight double"
     )
     pc = phrase_clauses_df(spark, phrase_rows) if phrase_rows else None
     return phrase_weighted_topk(index, positional, tc, pc, k=k, **kw)
@@ -380,8 +382,8 @@ def indri_rm3_topk(
     from ..indriql import parse_indri_topics
 
     term_rows, phrase_rows = parse_indri_topics(topics)
-    tc = spark.createDataFrame(
-        term_rows, "qid string, term string, weight double"
+    tc = local_frame(
+        spark, term_rows, "qid string, term string, weight double"
     )
     pc = phrase_clauses_df(spark, phrase_rows) if phrase_rows else None
     return phrase_rm3_topk(spark, index, positional, tc, pc, k=k, **kw)
@@ -403,8 +405,8 @@ def indri_query_topk(
     from ..indriql import parse_indri_topics
 
     term_rows, phrase_rows = parse_indri_topics(topics)
-    tc = spark.createDataFrame(
-        term_rows, "qid string, term string, weight double"
+    tc = local_frame(
+        spark, term_rows, "qid string, term string, weight double"
     )
     pc = phrase_clauses_df(spark, phrase_rows) if phrase_rows else None
     return phrase_weighted_topk(index, positional, tc, pc, k=k, **kw)

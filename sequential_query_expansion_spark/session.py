@@ -15,10 +15,19 @@ import os
 
 from pyspark.sql import SparkSession
 
-# At 10^12 docs the build shuffles by (term-bucket, salt); the default
-# partition count below is for local testing only — cluster runs set
-# spark.sql.shuffle.partitions ~ 2-3x total cores via spark-submit conf.
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """Local parallelism when the caller names none: ``SPARK_GRAFT_CPUS``
+    if set, else the CPUs this process may run on (its affinity set,
+    not the host's count).
+
+    At 10^12 docs the build shuffles by (term-bucket, salt); this
+    default is for local runs only — cluster runs set
+    spark.sql.shuffle.partitions ~ 2-3x total cores via spark-submit
+    conf."""
+    return int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
 
 
 def get_spark(
@@ -29,13 +38,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the bench
-    harness can pin parallelism (the two-cluster-size scaling evidence
-    runs the same job at local[8] and local[32]).
+    ``master`` defaults to ``local[default_cpus()]`` and
+    ``shuffle_partitions`` to ``default_cpus()``, so the bench harness
+    can pin parallelism through ``SPARK_GRAFT_CPUS`` (the
+    two-cluster-size scaling evidence runs the same job at local[8] and
+    local[32]).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    shuffle_partitions = shuffle_partitions or cpus
 
     b = (
         SparkSession.builder.master(master)

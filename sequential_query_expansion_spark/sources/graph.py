@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..util import local_frame
+
 PRINTABLE_RE = "^[\\x20-\\x7e]+$"
 
 # S4 static semantic-type table: the reference fetches
@@ -42,7 +44,8 @@ GOOD_TUIS = sorted(tui for tui, _ in SEMANTIC_TYPES.values())
 
 def semantic_types_df(spark: SparkSession) -> DataFrame:
     """(abbr, tui, name) lookup DataFrame (broadcast-sized)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(a, t, n) for a, (t, n) in sorted(SEMANTIC_TYPES.items())],
         "abbr string, tui string, name string",
     )

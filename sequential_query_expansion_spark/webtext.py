@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .index.build import IndexTables, build_index_from_docs
-from .util import ensure_parallelism
+from .util import ensure_parallelism, local_frame
 
 # qid -> query text (frozen; bench + driver correctness both use these).
 WEB_QUERIES: Dict[str, str] = {
@@ -54,8 +54,8 @@ def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        sorted(WEB_QUERIES.items()), "qid string, text string"
+    return local_frame(
+        spark, sorted(WEB_QUERIES.items()), "qid string, text string"
     )
 
 
@@ -211,7 +211,8 @@ def cooccur_edges(
                 .select("src", "dst")
             )
 
-        seeds = spark.createDataFrame(
+        seeds = local_frame(
+            spark,
             [(t,) for t in sorted({t for _, t, _ in query_term_rows()})],
             "term string",
         )
@@ -240,7 +241,8 @@ def pseudo_qrels(spark: SparkSession, sf_dir: str) -> DataFrame:
     if key in _INDEX_CACHE:
         return _INDEX_CACHE[key]
     idx = doc_index(spark, sf_dir)
-    qt = spark.createDataFrame(
+    qt = local_frame(
+        spark,
         [(q, t) for q, t, _ in query_term_rows()], "qid string, term string"
     ).distinct()
     n_terms = qt.groupBy("qid").agg(F.count("*").alias("n_terms"))

@@ -140,3 +140,19 @@ def test_expanded_run_executes(spark, index_tables, qt, graph_df):
     pdf = res.toPandas()
     assert len(pdf) > 0
     assert (pdf.groupby("qid")["rank"].max() <= 10).all()
+
+
+def test_driver_tables_are_local_relations(spark, index_tables, qt, graph_df):
+    """The tables the loop builds from driver rows are planned as Arrow
+    LocalRelations, never as a LogicalRDD whose every consumer runs
+    Python tasks to unpickle the rows again."""
+    feats = cg.concept_features(index_tables, qt, graph_df, top_t=TOP_T)
+    exp = cg.sequential_expand(
+        index_tables, qt, graph_df, layers=1,
+        per_layer_terms=(5,), layer_weights=(0.3,), top_t=TOP_T,
+    )
+    for df in (feats, exp):
+        # a plan equal to a cached one shows as InMemoryRelation over
+        # the physical scan, so both scan names are checked
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan and "ExistingRDD" not in plan, plan

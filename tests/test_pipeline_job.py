@@ -25,6 +25,10 @@ def _load_job():
     return mod
 
 
+def _persisted_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 @pytest.fixture(scope="module")
 def job():
     return _load_job()
@@ -52,7 +56,10 @@ def test_pipeline_job_end_to_end(spark, tmp_path, monkeypatch, job):
          "--rates", "src0=0.0,src1=0.5", "--bench", bench_path,
          "--capacity", "256"],
     )
+    before = _persisted_rdds(spark)
     assert job.main() == 0
+    # every cache the job and its operators make is released
+    assert _persisted_rdds(spark) == before
 
     out = spark.read.parquet(out_path).toPandas().sort_values("doc_id")
     assert len(out) > 0

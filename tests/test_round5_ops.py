@@ -382,3 +382,15 @@ class TestPackSequences:
         )
         out = training_prep.pack_sequences(df, capacity=8)
         assert sorted(r["start_tok"] for r in out.collect()) == [0, 5]
+
+    @pytest.mark.parametrize(
+        "rows, n_null",
+        [([(1, None), (2, None)], 2), ([(1, 5), (2, None), (3, 4)], 1)],
+        ids=["all_null", "some_null"],
+    )
+    def test_rejects_null_token_counts(self, spark, rows, n_null):
+        # an all-NULL range partition has no token sum (TypeError on
+        # int(None)); a NULL among counts would get a NULL start offset
+        df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
+        with pytest.raises(ValueError, match=rf"^{n_null} row\(s\) have a NULL"):
+            training_prep.pack_sequences(df, capacity=8)
