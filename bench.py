@@ -1,37 +1,27 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Two-cluster-size scaling evidence for the index build.
 
-Measured stages:
-  index_build      — full inverted-index build incl. blocked/compressed
-                     postings (docs/sec reported as ``docs_per_sec``)
-  bm25_topk_batch  — all queries in one scoring join
-  rm3_topk_batch   — sequential RM3 expansion + expanded re-run
-  serving_*        — checkpoint publish cost + per-query BM25 and RM3
-                     latency (p50/p99) of the no-Spark serving tier
-                     (scoring/local.LocalSearcher)
-  minhash_dedup    — MinHash→LSH→verify near-dup pairs over documents
-  cosine_topk      — brute-force cosine ANN for 4 probes
-  eval_metrics     — MAP/P@10/NDCG/MRR aggregation
+    python bench.py --scaling
 
-``--scaling`` re-runs the index build at two parallelism levels
-(local[N] and local[4N], N = SPARK_GRAFT_SCALE_BASE or 2; 4N must fit
-the process's CPU affinity set) in fresh subprocesses and reports
-throughput + scaling efficiency — the two-cluster-size evidence of
-BASELINE.md.
+re-runs the index build at two parallelism levels (local[N] and
+local[4N], N = SPARK_GRAFT_SCALE_BASE or 2; 4N must fit the process's
+CPU affinity set) in fresh subprocesses and reports throughput +
+scaling efficiency — the evidence of BASELINE.md, written to
+``artifacts/scaling.json``. The repo benchmark is ``perfbench/run.py``.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 import sys
 import time
 
+from sequential_query_expansion_spark.session import default_cpus, get_spark
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cpus()
 _ARTIFACTS = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                           "artifacts")
 
@@ -66,185 +56,7 @@ def _build_and_time(spark, sf_dir, replicate: int = 1):
     idx.vocab.count()
     blocked = idx.postings.persist()
     blocked.agg(F.sum("df")).collect()
-    t = time.perf_counter() - t0
-    idx.postings = blocked
-    return idx, t
-
-
-def run_suite(out_path: str | None = None) -> dict:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from sequential_query_expansion_spark import driver_contract as dc
-    from sequential_query_expansion_spark import webtext
-    from sequential_query_expansion_spark.session import get_spark
-
-    spark = get_spark("sqe-bench", master=f"local[{CPUS}]",
-                      shuffle_partitions=CPUS)
-    timings: dict[str, float] = {}
-
-    # warmup: a tiny throwaway build so JVM startup, codegen compilation,
-    # python-worker spawn and a first read of the parquet files are not
-    # billed to the measured build (mirrors run_build_only; observed to
-    # remove a cold-cache 2-3x swing in index_build right after other
-    # heavy jobs). Use the smallest sibling sf dir; if it is not strictly
-    # smaller than SF_DIR, skip — warming with an equal-or-larger corpus
-    # would silently double (or worse) the suite's build work.
-    warm_dir = os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001")
-    meas_sf = _sf_from_dir(SF_DIR)
-    if (
-        os.path.isdir(warm_dir)
-        and (meas_sf < 0 or _sf_from_dir(warm_dir) < meas_sf)
-    ):
-        _build_and_time(spark, warm_dir)
-        spark.catalog.clearCache()   # drop the warmup index's cached tables
-
-    idx, t_build = _build_and_time(spark, SF_DIR)
-    timings["index_build"] = round(t_build, 3)
-    n_docs = idx.n_docs
-    # seed the contract's index memo so query benches measure QUERY time
-    webtext._INDEX_CACHE[(SF_DIR, False, id(spark))] = idx
-
-    from sequential_query_expansion_spark.scoring.bm25 import query_term_table
-
-    queries = webtext.queries_df(spark)
-    qt_all = query_term_table(queries).persist()
-    qt_all.count()
-
-    # serving-tier per-query latency: LocalSearcher answers the same
-    # queries straight off the checkpointed on-disk index with ZERO
-    # Spark jobs (client-side bucket pruning + term-filtered parquet
-    # reads + the shared WAND kernel) — the IndriRunQuery analogue.
-    # serving_checkpoint is the one-time publish cost (Spark writes the
-    # blocked index to disk); serving_p50/p99 are what a stateless
-    # replica pays per query once the index is mounted.
-    from sequential_query_expansion_spark.scoring.local import LocalSearcher
-    from sequential_query_expansion_spark.webtext import disk_index_dir
-
-    t0 = time.perf_counter()
-    srv_dir = disk_index_dir(spark, SF_DIR)
-    timings["serving_checkpoint"] = round(time.perf_counter() - t0, 3)
-    searcher = LocalSearcher(srv_dir)
-    qterms = {
-        r["qid"]: []
-        for r in qt_all.select("qid").distinct().collect()
-    }
-    for r in qt_all.collect():
-        qterms[r["qid"]].append((r["term"], r["weight"]))
-    searcher.batch_topk(qterms, k=10)  # warm the term cache once
-    per_q_s = []
-    for qid in sorted(qterms):
-        t0 = time.perf_counter()
-        searcher.topk(qterms[qid], k=10)
-        per_q_s.append(time.perf_counter() - t0)
-    timings["serving_p50"] = round(statistics.median(per_q_s), 4)
-    timings["serving_p99"] = round(
-        sorted(per_q_s)[max(0, int(len(per_q_s) * 0.99) - 1)], 4
-    )
-    # cold-cache point query (term cache dropped, parquet still in page
-    # cache): the honest per-replica first-touch number
-    searcher._terms.clear()
-    t0 = time.perf_counter()
-    searcher.topk(qterms[sorted(qterms)[0]], k=10)
-    timings["serving_cold"] = round(time.perf_counter() - t0, 4)
-
-    # serving-tier PRF latency: RM3 runs entirely in-process (feedback
-    # pass, stored doc-vector fetch, expanded re-run) — same rankings as
-    # the Spark rm3_topk plan, at point-query cost
-    for qid in sorted(qterms):
-        searcher.rm3_topk(qterms[qid], k=10)  # warm term + dv reads
-    per_q_r = []
-    for qid in sorted(qterms):
-        t0 = time.perf_counter()
-        searcher.rm3_topk(qterms[qid], k=10)
-        per_q_r.append(time.perf_counter() - t0)
-    timings["serving_rm3_p50"] = round(statistics.median(per_q_r), 4)
-    timings["serving_rm3_p99"] = round(
-        sorted(per_q_r)[max(0, int(len(per_q_r) * 0.99) - 1)], 4
-    )
-
-    # S14 maintenance: tombstone 1% of docs, then compact (bucket-pruned
-    # rewrite + global re-encode to pfor — the write-once-read-many
-    # codec). Runs on a COPY so the memoized serving dir stays pristine.
-    import shutil
-    import tempfile
-
-    from sequential_query_expansion_spark.index import maintenance as mt
-
-    cdir = tempfile.mkdtemp(prefix="sqe_compact_") + "/idx"
-    shutil.copytree(srv_dir, cdir)
-    deleted = list(range(0, int(n_docs), 100))
-    t0 = time.perf_counter()
-    mt.delete_docs(spark, cdir, deleted)
-    mt.compact_index(spark, cdir, codec="pfor")
-    timings["delete_compact"] = round(time.perf_counter() - t0, 3)
-    shutil.rmtree(cdir, ignore_errors=True)
-
-    def bench(name, fn):
-        t0 = time.perf_counter()
-        fn(spark, SF_DIR).count()
-        timings[name] = round(time.perf_counter() - t0, 3)
-
-    bench("bm25_topk_batch", dc.q_bm25_topk)
-    bench("lm_topk_batch", dc.q_lm_topk)
-    bench("rm3_topk_batch", dc.q_bm25_rm3_topk)
-    # entry point 1 end-to-end: graph candidates -> 14-feature scoring
-    # -> 2-layer sequential selection -> #weight final run (includes the
-    # one-time co-occurrence edge derivation)
-    bench("sequential_expand", dc.q_sequential_expand_topk)
-    bench("phrase_topk_batch", dc.q_phrase_weighted_topk)
-    bench("minhash_dedup", dc.q_minhash_dedup)
-    bench("simhash_pairs", dc.q_simhash_pairs)
-    # round-5 additions: the pre-index web-pipeline passes (URL dedup,
-    # repetition gates, PII redaction, benchmark decontamination) — new
-    # lines, so absent from pre-r5 BENCH files
-    bench("url_dedup", dc.q_url_dedup)
-    bench("repetition_stats", dc.q_repetition_stats)
-    bench("pii_scan", dc.q_pii_scan)
-    bench("decontaminate", dc.q_decontaminate)
-    bench("line_dedup", dc.q_line_dedup)
-    bench("mixture_sample", dc.q_mixture_sample)
-    bench("pack_sequences", dc.q_pack_sequences)
-    # the composed pipeline: url dedup -> line dedup -> PII redact ->
-    # repetition gate -> decontam -> mixture -> pack, one lineage
-    bench("training_set_build", dc.q_training_set_build)
-    bench("cosine_topk", dc.q_cosine_topk)
-    # round-4 addition: PQ encode + integer-ADC ranking (the compact-code
-    # ANN path); new line, so absent from pre-r4 BENCH files
-    bench("pq_topk_adc", dc.q_pq_topk_adc)
-    bench("eval_metrics", dc.q_eval_metrics)
-
-    total = round(sum(timings.values()), 3)
-    result = {
-        "metric": "e2e_suite_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": _sf_from_dir(SF_DIR),
-        "n_docs": n_docs,
-        "docs_per_sec": round(n_docs / t_build, 1),
-        "cpus": CPUS,
-    }
-    # two-cluster-size evidence from the most recent `bench.py --scaling`
-    # run (pinned 2M-doc builds at N / 4N / 16N cores — too slow to repeat
-    # inside every suite run; clearly labeled as a separate measurement)
-    scaling_path = os.path.join(_ARTIFACTS, "scaling.json")
-    if os.path.exists(scaling_path):
-        try:
-            with open(scaling_path) as f:
-                sc = json.loads(f.read().strip())
-            sc["measured_by"] = "bench.py --scaling (separate pinned run)"
-            result["scaling"] = sc
-        except (ValueError, OSError):
-            pass
-    line = json.dumps(result)
-    # stop Spark BEFORE printing the result line: the worker-daemon
-    # teardown can emit a (harmless) BrokenPipeError traceback, and the
-    # driver parses the LAST json-looking stdout line — keep ours last.
-    spark.stop()
-    print(line)
-    if out_path:
-        with open(out_path, "w") as f:
-            f.write(line + "\n")
-    return result
+    return idx.n_docs, time.perf_counter() - t0
 
 
 def run_scaling() -> None:
@@ -330,18 +142,12 @@ def run_scaling() -> None:
         "sf": _sf_from_dir(SF_DIR),
     })
     print(line)
-    # persist so the default suite (the driver's per-round BENCH run) can
-    # attach the latest two-cluster-size evidence without re-paying the
-    # multi-minute pinned runs
     os.makedirs(_ARTIFACTS, exist_ok=True)
     with open(os.path.join(_ARTIFACTS, "scaling.json"), "w") as f:
         f.write(line + "\n")
 
 
 def run_build_only() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from sequential_query_expansion_spark.session import get_spark
-
     replicate = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "400"))
     spark = get_spark("sqe-bench-build", master=f"local[{CPUS}]",
                       shuffle_partitions=CPUS)
@@ -352,8 +158,7 @@ def run_build_only() -> None:
     _build_and_time(spark, warm_dir if os.path.isdir(warm_dir) else SF_DIR,
                     replicate=1)
     spark.catalog.clearCache()
-    idx, t_build = _build_and_time(spark, SF_DIR, replicate=replicate)
-    n_docs = idx.n_docs
+    n_docs, t_build = _build_and_time(spark, SF_DIR, replicate=replicate)
     spark.stop()           # before the print: keep our JSON the last line
     print(json.dumps({
         "metric": "index_build_sec",
@@ -373,4 +178,5 @@ if __name__ == "__main__":
     elif os.environ.get("SPARK_GRAFT_BENCH_MODE") == "build_only":
         run_build_only()
     else:
-        run_suite()
+        sys.exit("usage: python bench.py --scaling "
+                 "(the repo benchmark is perfbench/run.py)")

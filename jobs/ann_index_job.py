@@ -19,6 +19,9 @@ quantizer's training metric matches the L2 assignment the index uses —
 then derives PQ codebooks from coarse residuals and publishes
 bucket-partitioned codes + manifest (index/ann.py).
 
+An --input/--probes string containing '/' or ending in .parquet is read as
+parquet, a bare name as a metastore table (session.read_input).
+
 Local smoke: python jobs/ann_index_job.py build \
     --input /root/testdata/sf0.001/embeddings.parquet --output /tmp/annidx
 """
@@ -31,19 +34,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
-
-def _read(spark, path, as_table=False):
-    """Parquet path unless --table was passed or the string names no
-    existing filesystem entry and carries no path separator (a relative
-    parquet dir like 'embeddings' must NOT silently become a metastore
-    lookup)."""
-    if as_table:
-        return spark.read.table(path)
-    if os.path.exists(path) or "/" in path or path.endswith(".parquet"):
-        return spark.read.parquet(path)
-    return spark.read.table(path)
+from sequential_query_expansion_spark.session import (  # noqa: E402
+    job_spark, read_input,
+)
 
 
 def main() -> int:
@@ -51,8 +46,6 @@ def main() -> int:
     sub = ap.add_subparsers(dest="cmd", required=True)
     b = sub.add_parser("build")
     b.add_argument("--input", required=True)
-    b.add_argument("--table", action="store_true",
-                   help="treat --input/--probes as metastore table names")
     b.add_argument("--output", required=True)
     b.add_argument("--id-col", default="vec_id")
     b.add_argument("--vec-col", default="embedding")
@@ -73,18 +66,12 @@ def main() -> int:
     q.add_argument("--refine", type=int, default=None)
     q.add_argument("--input", default=None,
                    help="source embeddings (required with --refine)")
-    q.add_argument("--table", action="store_true",
-                   help="treat --input/--probes as metastore table names")
     args = ap.parse_args()
     if args.cmd == "query" and args.refine is not None and not args.input:
         ap.error("--refine requires --input (source embeddings for the "
                  "exact re-rank)")
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from sequential_query_expansion_spark.session import get_spark
-
-        spark = get_spark("sqe-ann-index")
+    spark = job_spark("sqe-ann-index")
 
     import numpy as np
 
@@ -92,7 +79,7 @@ def main() -> int:
     from sequential_query_expansion_spark.operators import similarity as sim
 
     if args.cmd == "build":
-        emb = _read(spark, args.input, args.table)
+        emb = read_input(spark, args.input)
         # coarse quantizer: deterministic sampled-row init, refined with
         # plain-L2 Lloyd passes — pq_train at m=1 is exactly a
         # distributed full-vector L2 k-means (one assignment job + one
@@ -129,11 +116,11 @@ def main() -> int:
               f"({args.n_centroids} lists, m={args.m}) -> {args.output}")
         return 0
 
-    probes = _read(spark, args.probes, args.table).select(
+    probes = read_input(spark, args.probes).select(
         F.col(args.id_col).alias("probe_id"),
         F.col(args.vec_col).alias("embedding"),
     )
-    emb = _read(spark, args.input, args.table) if args.input else None
+    emb = read_input(spark, args.input) if args.input else None
     out = ann.query_ivfpq(
         spark, args.index, probes, k=args.k, nprobe=args.nprobe,
         refine=args.refine,

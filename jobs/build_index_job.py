@@ -24,7 +24,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from sequential_query_expansion_spark.session import (  # noqa: E402
+    job_spark, read_input,
+)
 
 
 def main() -> int:
@@ -48,24 +52,13 @@ def main() -> int:
                          "--compact --codec pfor)")
     args = ap.parse_args()
 
-    # under spark-submit the cluster conf wins; standalone falls back to
-    # the local session factory
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from sequential_query_expansion_spark.session import get_spark
-
-        spark = get_spark("sqe-build-index")
+    spark = job_spark("sqe-build-index")
 
     from sequential_query_expansion_spark.index.checkpoint import (
         build_index_checkpointed,
     )
 
-    src = (
-        spark.read.table(args.input)
-        if not args.input.endswith((".parquet", "/")) and "/" not in args.input
-        else spark.read.parquet(args.input)
-    )
-    docs = src.select(
+    docs = read_input(spark, args.input).select(
         F.col(args.id_col).cast("long").alias("doc_id"),
         F.col(args.text_col).alias("text"),
     )

@@ -36,7 +36,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
+
+from sequential_query_expansion_spark.session import (  # noqa: E402
+    job_spark, read_input,
+)
 
 
 def _parse_rates(spec: str) -> dict:
@@ -83,11 +87,7 @@ def main() -> int:
     args = ap.parse_args()
     rates = _parse_rates(args.rates)  # fail fast, before any Spark work
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from sequential_query_expansion_spark.session import get_spark
-
-        spark = get_spark("sqe-pipeline")
+    spark = job_spark("sqe-pipeline")
 
     from sequential_query_expansion_spark.functions.text import tokenize_col
     from sequential_query_expansion_spark.operators import (
@@ -98,11 +98,7 @@ def main() -> int:
         training_prep,
     )
 
-    read = (
-        spark.read.parquet if ("/" in args.input or os.path.exists(args.input))
-        else spark.read.table
-    )
-    docs = read(args.input)
+    docs = read_input(spark, args.input)
     idc, txc = args.id_col, args.text_col
 
     if args.url_col:

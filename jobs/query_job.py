@@ -31,7 +31,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from sequential_query_expansion_spark.session import job_spark  # noqa: E402
 
 
 def main() -> int:
@@ -57,11 +57,7 @@ def main() -> int:
                          "(#weight/#combine/#odN/#uwN)")
     args = ap.parse_args()
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from sequential_query_expansion_spark.session import get_spark
-
-        spark = get_spark("sqe-query")
+    spark = job_spark("sqe-query")
 
     from sequential_query_expansion_spark.expansion.rm3 import rm3_topk
     from sequential_query_expansion_spark.index.maintenance import (

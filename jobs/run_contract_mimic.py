@@ -9,6 +9,9 @@ tests/test_driver_contract.py — and writes the result in the driver's
 JSON shape, so the judge can diff driver-vs-mimic per round and every
 entry has a green row dated after its last code change.
 
+``oracle_views`` and ``compare`` are the one copy of that comparison;
+tests/test_driver_contract.py loads them from this file.
+
 Usage:
     python jobs/run_contract_mimic.py [--sf /root/testdata/sf0.01] \
         [--out artifacts/CORRECTNESS_MIMIC_r04.json]
@@ -38,6 +41,42 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def oracle_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per testdata table present."""
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
+def compare(got: pd.DataFrame, want: pd.DataFrame) -> dict:
+    """Row-count + schema + exact order-insensitive value comparison of
+    an entry's result with its oracle's; ``err`` says what mismatched
+    (None when everything matches)."""
+    got, want = _normalize(got), _normalize(want)
+    rec = {
+        "rows_match": len(got) == len(want),
+        "schema_match": list(got.columns) == list(want.columns),
+        "hash_match": False, "spark_rows": len(got),
+        "oracle_rows": len(want), "err": None,
+    }
+    if not rec["schema_match"]:
+        rec["err"] = f"columns {list(got.columns)} != {list(want.columns)}"
+    elif not rec["rows_match"]:
+        rec["err"] = f"{len(got)} rows vs oracle {len(want)}"
+    else:
+        try:
+            pd.testing.assert_frame_equal(
+                got, want, check_dtype=False, check_exact=True
+            )
+            rec["hash_match"] = True
+        except AssertionError as e:
+            rec["err"] = f"value mismatch: {e}"
+    return rec
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -48,43 +87,24 @@ def main() -> int:
     from sequential_query_expansion_spark.session import get_spark
 
     spark = get_spark("contract-mimic")
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{args.sf}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    con = oracle_views(args.sf)
 
     oracles = entrymod.oracle_sql()
     queries = entrymod.queries()
     results: dict = {}
+    failed = {"rows_match": False, "schema_match": False,
+              "hash_match": False, "spark_rows": None, "oracle_rows": None}
     for name in sorted(queries):
-        rec = {
-            "rows_match": False, "schema_match": False,
-            "hash_match": False, "spark_rows": None,
-            "oracle_rows": None, "err": None,
-        }
         try:
-            got = _normalize(queries[name](spark, args.sf).toPandas())
-            rec["spark_rows"] = int(len(got))
-            if name not in oracles:
-                # rows-only entry (none today; kept for shape parity)
-                rec["err"] = "no oracle (rows-only entry)"
-                results[name] = rec
-                continue
-            want = _normalize(con.execute(oracles[name]).df())
-            rec["oracle_rows"] = int(len(want))
-            rec["rows_match"] = len(got) == len(want)
-            rec["schema_match"] = list(got.columns) == list(want.columns)
-            if rec["rows_match"] and rec["schema_match"]:
-                try:
-                    pd.testing.assert_frame_equal(
-                        got, want, check_dtype=False, check_exact=True
-                    )
-                    rec["hash_match"] = True
-                except AssertionError as e:
-                    rec["err"] = f"value mismatch: {str(e)[:200]}"
+            got = queries[name](spark, args.sf).toPandas()
+            if name in oracles:
+                rec = compare(got, con.execute(oracles[name]).df())
+            else:  # rows-only entry (none today; kept for shape parity)
+                rec = dict(failed, spark_rows=len(got),
+                           err="no oracle (rows-only entry)")
         except Exception as e:  # noqa: BLE001 — record, keep going
-            rec["err"] = f"{type(e).__name__}: {str(e)[:300]}"
+            rec = dict(failed, err=f"{type(e).__name__}: {e}")
+        rec["err"] = rec["err"] and rec["err"][:300]
         results[name] = rec
         status = "ok" if rec["hash_match"] else f"FAIL ({rec['err']})"
         print(f"{name}: {rec['spark_rows']} rows — {status}", flush=True)

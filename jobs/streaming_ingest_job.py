@@ -24,7 +24,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from sequential_query_expansion_spark.session import job_spark  # noqa: E402
 
 
 def main() -> int:
@@ -38,11 +38,7 @@ def main() -> int:
     ap.add_argument("--continuous", action="store_true")
     args = ap.parse_args()
 
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        from sequential_query_expansion_spark.session import get_spark
-
-        spark = get_spark("sqe-streaming-ingest")
+    spark = job_spark("sqe-streaming-ingest")
 
     from sequential_query_expansion_spark.streaming import pipeline
 

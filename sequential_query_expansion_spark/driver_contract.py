@@ -136,13 +136,20 @@ def _dirichlet_scored(name: str, terms: str) -> str:
   FROM {name}_m m JOIN {name}_wq wq ON wq.qid = m.qid)"""
 
 
-def _rm1(topk: str) -> str:
+# RM1 feedback-doc weights over fbtop(qid, doc_id, score, top), where top
+# is the qid's best feedback score: each doc's share of the BM25 mass, or
+# the posterior softmax(log-QL) for the Dirichlet LM
+_SCORE_SHARE = "score / sum(score) OVER (PARTITION BY qid)"
+_SOFTMAX = "exp(score - top) / sum(exp(score - top)) OVER (PARTITION BY qid)"
+
+
+def _rm1(topk: str, w_doc: str = _SCORE_SHARE) -> str:
     """CTEs ending in ``rm1n(qid, term, weight)``: RM1 over the
-    top-FB_DOCS docs of ``{topk}(qid, doc_id, score, rank)`` (score-share
-    doc weights), cut to FB_TERMS terms with mass 1 - ORIG_W."""
-    return f"""fbtop AS (SELECT qid, doc_id, score FROM {topk} WHERE rank <= {FB_DOCS}),
-fb AS (SELECT qid, doc_id,
-              score / sum(score) OVER (PARTITION BY qid) AS w_doc FROM fbtop),
+    top-FB_DOCS docs of ``{topk}(qid, doc_id, score, rank)`` with doc
+    weights ``w_doc``, cut to FB_TERMS terms with mass 1 - ORIG_W."""
+    return f"""fbtop AS (SELECT qid, doc_id, score, max(score) OVER (PARTITION BY qid) AS top
+          FROM {topk} WHERE rank <= {FB_DOCS}),
+fb AS (SELECT qid, doc_id, {w_doc} AS w_doc FROM fbtop),
 rm1 AS (
   SELECT fb.qid, tf.term, sum(fb.w_doc * tf.tf::DOUBLE / dl.dl) AS w
   FROM fb JOIN tf ON tf.doc_id = fb.doc_id JOIN dl ON dl.doc_id = fb.doc_id
@@ -160,16 +167,19 @@ rm1n AS (SELECT qid, term,
 
 _SCORED = _bm25_scored("scored", "qterms") + ",\n" + _ranked("topk", "scored")
 
-# RM3 over the unexpanded top-FB_DOCS run (mirrors expansion/rm3.py).
-_RM3 = _rm1("topk") + f""",
+
+def _rm3(topk: str, w_doc: str = _SCORE_SHARE) -> str:
+    """CTEs ending in ``expanded(qid, term, weight)``: RM3 over the
+    unexpanded run ``{topk}`` (mirrors expansion/rm3.py) — :func:`_rm1`
+    interpolated with the ORIG_W-normalized ``qterms``."""
+    return _rm1(topk, w_doc) + f""",
 orig AS (SELECT qid, term,
                 {ORIG_W} * weight / sum(weight) OVER (PARTITION BY qid) AS weight
          FROM qterms),
 expanded AS (
   SELECT qid, term, sum(weight) AS weight
   FROM (SELECT * FROM orig UNION ALL SELECT * FROM rm1n) GROUP BY qid, term
-)
-"""
+)"""
 
 _SHINGLES = """
 sh AS (
@@ -2869,42 +2879,8 @@ WITH {_BASE},
 c AS (SELECT sum(cf)::DOUBLE AS c_total FROM vocab),
 {_dirichlet_scored("lmscored", "qterms")},
 {_ranked("lmtopk", "lmscored")},
-fbtop AS (SELECT qid, doc_id, score FROM lmtopk WHERE rank <= {FB_DOCS}),
-mx AS (SELECT qid, max(score) AS mxs FROM fbtop GROUP BY qid),
-fbe AS (SELECT f.qid, f.doc_id, exp(f.score - mx.mxs) AS e
-        FROM fbtop f JOIN mx ON mx.qid = f.qid),
-fbn AS (SELECT qid, doc_id, e / sum(e) OVER (PARTITION BY qid) AS w_doc
-        FROM fbe),
-rm1d AS (
-  SELECT fbn.qid, tf.term, sum(fbn.w_doc * tf.tf / dl.dl) AS w
-  FROM fbn
-  JOIN tf ON tf.doc_id = fbn.doc_id
-  JOIN dl ON dl.doc_id = fbn.doc_id
-  GROUP BY fbn.qid, tf.term
-),
-rm1rk AS (
-  SELECT qid, term, w,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY round(w, {RANK_ROUND + 3}) DESC, term) AS rn
-  FROM rm1d
-),
-rm1top AS (SELECT qid, term, w FROM rm1rk WHERE rn <= {FB_TERMS}),
-rm1n AS (
-  SELECT qid, term,
-         (1.0 - {ORIG_W}) * w / sum(w) OVER (PARTITION BY qid) AS weight
-  FROM rm1top
-),
-nq AS (SELECT qid, sum(weight)::DOUBLE AS n_q FROM qterms GROUP BY qid),
-origd AS (
-  SELECT q.qid, q.term, {ORIG_W} * q.weight / nq.n_q AS weight
-  FROM qterms q JOIN nq ON nq.qid = q.qid
-),
-expd AS (
-  SELECT qid, term, sum(weight) AS weight
-  FROM (SELECT * FROM origd UNION ALL SELECT * FROM rm1n)
-  GROUP BY qid, term
-),
-{_dirichlet_scored("lmscored2", "expd")},
+{_rm3("lmtopk", _SOFTMAX)},
+{_dirichlet_scored("lmscored2", "expanded")},
 {_ranked("lmtopk2", "lmscored2")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score
 FROM lmtopk2 WHERE rank <= {TOPK}
@@ -2955,7 +2931,7 @@ FROM tstopk WHERE rank <= {TOPK}
 WITH {_BASE},
 {qterms},
 {_SCORED},
-{_RM3}
+{_rm3("topk")}
 SELECT qid, term, round(weight, 6) AS weight FROM expanded
 """
 
@@ -2963,7 +2939,7 @@ SELECT qid, term, round(weight, 6) AS weight FROM expanded
 WITH {_BASE},
 {qterms},
 {_SCORED},
-{_RM3},
+{_rm3("topk")},
 {_bm25_scored("scored2", "expanded")},
 {_ranked("topk2", "scored2")}
 SELECT qid, doc_id, rank::BIGINT AS rank, round(score, {SCORE_ROUND}) AS score

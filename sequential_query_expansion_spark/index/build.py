@@ -113,48 +113,17 @@ def build_index(
     salt_ranges: int = 8,
     codec: str = "varint",
 ) -> IndexTables:
-    """pages(url, warc_ts, html, text, lang) -> IndexTables."""
-    docmap = assign_doc_ids(pages)
-
-    tokens = tokenize_col(F.col("text"))
-    doc_terms = (
-        pages.select("url", tokens.alias("tokens"))
-        .join(docmap, "url")
-        .select("doc_id", "tokens")
+    """pages(url, warc_ts, html, text, lang) -> IndexTables: the global
+    url ranking of :func:`assign_doc_ids`, then :func:`build_index_from_docs`
+    over (doc_id, text), keeping the url-bearing docmap."""
+    docmap = assign_doc_ids(pages).persist()
+    docs = pages.select("url", "text").join(docmap, "url").select("doc_id", "text")
+    idx = build_index_from_docs(
+        docs, stem=stem, build_blocked=build_blocked,
+        salt_ranges=salt_ranges, codec=codec,
     )
-    if stem:
-        doc_terms = doc_terms.select("doc_id", stem_tokens("tokens").alias("tokens"))
-    doc_terms = doc_terms.persist()
-
-    doc_len = doc_terms.select("doc_id", F.size("tokens").alias("dl"))
-
-    postings_flat = explode_term_frequencies(doc_terms).persist()
-
-    vocab = postings_flat.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    )
-
-    gstats = doc_len.agg(
-        F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-    ).collect()[0]
-    n_docs, avgdl = int(gstats["n"]), float(gstats["avgdl"])
-
-    blocked = None
-    if build_blocked:
-        blocked = build_blocked_postings(
-            postings_flat, n_docs, avgdl, salt_ranges=salt_ranges, codec=codec
-        )
-
-    return IndexTables(
-        docmap=docmap.persist(),
-        doc_terms=doc_terms,
-        doc_len=doc_len,
-        vocab=vocab.persist(),
-        postings_flat=postings_flat,
-        postings=blocked,
-        n_docs=n_docs,
-        avgdl=avgdl,
-    )
+    idx.docmap = docmap
+    return idx
 
 
 def build_index_from_docs(

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def default_cpus() -> int:
@@ -39,10 +39,9 @@ def get_spark(
     """Build (or fetch) the session.
 
     ``master`` defaults to ``local[default_cpus()]`` and
-    ``shuffle_partitions`` to ``default_cpus()``, so the bench harness
-    can pin parallelism through ``SPARK_GRAFT_CPUS`` (the
-    two-cluster-size scaling evidence runs the same job at local[8] and
-    local[32]).
+    ``shuffle_partitions`` to ``default_cpus()``, so ``SPARK_GRAFT_CPUS``
+    pins local parallelism (``bench.py --scaling`` runs the same build
+    at N and 4N cores that way).
     """
     cpus = default_cpus()
     master = master or f"local[{cpus}]"
@@ -66,3 +65,21 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def job_spark(app_name: str) -> SparkSession:
+    """The session a job runs in: the active one when there is one
+    (spark-submit's, or a caller's), else :func:`get_spark`. The active
+    session comes first because ``getOrCreate`` on a live session would
+    overwrite the ``spark.sql.shuffle.partitions`` spark-submit set."""
+    return SparkSession.getActiveSession() or get_spark(app_name)
+
+
+def read_input(spark: SparkSession, name: str) -> DataFrame:
+    """A job's input: a parquet path when ``name`` contains ``/`` or ends
+    in ``.parquet``, otherwise a metastore table. The rule looks only at
+    the string, never at the driver's local filesystem, so it reads the
+    same on every default filesystem."""
+    if "/" in name or name.endswith(".parquet"):
+        return spark.read.parquet(name)
+    return spark.read.table(name)

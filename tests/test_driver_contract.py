@@ -1,42 +1,39 @@
 """Driver-mimic: run every __spark_entry__ query against its DuckDB
 oracle on the driver-generated testdata, exactly like the per-round
-correctness gate (row-count + schema + order-insensitive values)."""
+correctness gate (row-count + schema + order-insensitive values). The
+comparison itself is jobs/run_contract_mimic.py's."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
 
-import duckdb
-import pandas as pd
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+
+def _load_mimic():
+    spec = importlib.util.spec_from_file_location(
+        "run_contract_mimic", os.path.join(REPO, "jobs", "run_contract_mimic.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+mimic = _load_mimic()
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in TABLES:
-        path = f"{SF_DIR}/{t}.parquet"
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    return con
-
-
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    df = df.sort_values(list(df.columns)).reset_index(drop=True)
-    return df
+    return mimic.oracle_views(SF_DIR)
 
 
 ORACLES = entrymod.oracle_sql()
@@ -49,13 +46,10 @@ def test_every_oracle_key_has_a_query():
 
 @pytest.mark.parametrize("name", sorted(ORACLES))
 def test_query_matches_oracle(name, spark, duck):
-    got = _normalize(QUERIES[name](spark, SF_DIR).toPandas())
-    want = _normalize(duck.execute(ORACLES[name]).df())
-    assert list(got.columns) == list(want.columns), (
-        f"{name}: columns {list(got.columns)} != {list(want.columns)}"
+    rec = mimic.compare(
+        QUERIES[name](spark, SF_DIR).toPandas(), duck.execute(ORACLES[name]).df()
     )
-    assert len(got) == len(want), f"{name}: {len(got)} rows vs oracle {len(want)}"
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    assert rec["hash_match"], f"{name}: {rec['err']}"
 
 
 @pytest.mark.parametrize("name", sorted(set(QUERIES) - set(ORACLES)))
