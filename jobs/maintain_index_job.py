@@ -29,7 +29,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from sequential_query_expansion_spark.session import job_spark  # noqa: E402
 
 
 def main() -> int:
@@ -46,13 +46,7 @@ def main() -> int:
                          "faster encode)")
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("sqe-maintain")
-    if "SPARK_GRAFT_CPUS" in os.environ or not os.environ.get("SPARK_ENV_LOADED"):
-        builder = builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-        )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = job_spark("sqe-maintain")
 
     from sequential_query_expansion_spark.index import maintenance as mt
 
@@ -68,7 +62,6 @@ def main() -> int:
         print(f"compacted ({args.codec}); {idx.n_docs} docs remain")
     if not (args.delete_ids or args.delete_file or args.compact):
         print("nothing to do (pass --delete-ids/--delete-file/--compact)")
-    spark.stop()
     return 0
 
 

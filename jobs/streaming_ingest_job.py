@@ -68,7 +68,6 @@ def main() -> int:
         hs = os.path.join(args.output, "host_stats")
         if os.path.isdir(hs):
             print(f"host stats rows: {spark.read.parquet(hs).count()} -> {hs}")
-    spark.stop()
     return 0
 
 

@@ -17,8 +17,10 @@ NThrsh-coordAsc.ipynb) as DataFrame programs:
                    maxColCor, avgTopColCor, maxTopColCor, avgColPCor,
                    maxColPCor, avgTopColPCor, maxTopColPCor — computed
                    from feedback-doc stats, collection stats and
-                   co-occurrence counts (the `fx`/`efb` probe batches of
-                   occuranceCount.cpp:49-93/:191-208 become two joins)
+                   co-occurrence counts (the `fx` probe batch of
+                   occuranceCount.cpp:49-93 becomes one collect of pair
+                   and term counts; the `efb` batch of :191-208 one
+                   collect of the feedback docs' term vectors)
   normalize (A4) — per-feature sum-normalization per query
                    (`normDictOfDicts` :903-958)
   combine (A5)   — weighted linear combination (`weightedCombineDicts`)
@@ -36,7 +38,6 @@ is what the downstream contract (normalize→combine→select) needs.
 from __future__ import annotations
 
 import math
-from concurrent.futures import ThreadPoolExecutor
 from typing import Dict, List
 
 from pyspark.sql import DataFrame, Window
@@ -114,52 +115,22 @@ def concept_features(
     the layered loop would otherwise accumulate per-layer cached
     partitions across iterations (executor memory at scale).
 
-    The per-layer driver sets — feedback docs, candidate edges and the
-    output features — are bounded by queries × top_t / queries × edges
-    and do NOT grow with the corpus, so they are materialized
-    driver-side once and sent back through ``util.local_frame``: every
-    consumer below then broadcasts a LocalTableScan (a ``LocalRelation``
-    in the optimized plan, no Python task) instead of re-reading a
-    persisted subtree through its own broadcast-exchange sub-job (~12
-    such sites; their scheduling latency dominated this pass's
-    wall-clock at every tested scale). All postings consumers
-    share ONE term-pruned scan (`pf_sub`) — at web scale that filter is
-    the bucket/partition prune, and it is the only big-table read here
-    besides the feedback BM25 pass."""
+    One serial chain of four collects on the caller's thread, so every
+    job keeps the caller's job group: candidate edges, the feedback
+    top-T, the feedback docs' vectors over the layer's term set (the
+    reference's ``efb`` probe) and one union of pair and term counts
+    over the collection (its ``fx`` probe). Each collected set is
+    bounded by queries × top_t × |term set| or by the candidate pairs
+    and does NOT grow with the corpus; the features are assembled from
+    them driver-side, as weightRelConcept does in python dicts
+    (:767-891). Both postings consumers share ONE term-pruned scan
+    (`pf_sub`) — at web scale that filter is the bucket/partition
+    prune, and it is the only big-table read here besides the feedback
+    BM25 pass."""
     n_docs = float(index.n_docs)
     spark = query_terms.sparkSession
 
-    # the feedback pass and the candidate generation are independent →
-    # overlap their blocking collects (Spark schedules concurrent jobs
-    # from separate threads; both results are tiny)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fut_top = pool.submit(
-            lambda: score_topk(
-                index, query_terms, k=top_t, rank_round=rank_round,
-                with_url=False,
-            )
-            .join(index.doc_len, "doc_id")
-            .select("qid", "doc_id", "score", "dl")
-            .collect()
-        )
-        fut_cand = pool.submit(
-            lambda: candidate_edges(
-                query_terms, graph_edges, count_lim
-            ).collect()
-        )
-        topdoc_rows = fut_top.result()
-        cand_rows = fut_cand.result()
-    topdocs = local_frame(
-        spark,
-        [(r["qid"], r["doc_id"], r["score"]) for r in topdoc_rows],
-        "qid string, doc_id long, score double",
-    )
-    top_dl_sum: Dict[str, int] = {}
-    for r in topdoc_rows:
-        top_dl_sum[r["qid"]] = top_dl_sum.get(r["qid"], 0) + r["dl"]
-    cands = local_frame(
-        spark, cand_rows, "qid string, orig string, cand string, n_links long"
-    )
+    cand_rows = candidate_edges(query_terms, graph_edges, count_lim).collect()
     term_set = sorted(
         {r["cand"] for r in cand_rows} | {r["orig"] for r in cand_rows}
     )
@@ -170,6 +141,15 @@ def concept_features(
             "qid string, cand string, "
             + ", ".join(f"{f} double" for f in FEATURES),
         )
+    topdoc_rows = (
+        score_topk(
+            index, query_terms, k=top_t, rank_round=rank_round,
+            with_url=False,
+        )
+        .join(index.doc_len, "doc_id")
+        .select("qid", "doc_id", "score", "dl")
+        .collect()
+    )
 
     pf_sub = (
         index.postings_flat.filter(F.col("term").isin(term_set))
@@ -178,84 +158,54 @@ def concept_features(
     )
     if caches is not None:
         caches.append(pf_sub)
-    # per-term df over pf_sub == vocab.df (one postings row per
-    # (term, doc)); collected concurrently with the three feature
-    # aggregates below
-    tdf_agg = pf_sub.groupBy("term").agg(F.count("*").alias("df"))
-    # --- feedback-doc features: candidate postings ∩ topT docs (J4) ----
-    # persisted: feeds BOTH the per-candidate aggregates and the
-    # feedback-doc co-occurrence counts below; ≤ queries × topT × doclen
-    # rows, so the cache is tiny while the postings scan it saves is not
-    cand_in_top = (
-        pf_sub.withColumnRenamed("term", "cand")
-        .join(F.broadcast(cands.select("qid", "cand").distinct()), "cand")
-        .join(F.broadcast(topdocs), ["qid", "doc_id"])
-        .persist()
-    )
-    if caches is not None:
-        caches.append(cand_in_top)
-    fb_agg = cand_in_top.groupBy("qid", "cand").agg(
-        F.sum("score").alias("expTDocScore"),
-        F.sum("tf").alias("tf_top"),
-        F.count("*").alias("numCanDocs"),
-        F.avg("score").alias("avgCDocScore"),
-        F.max("score").alias("maxCDocScore"),
-    )
 
-    # --- co-occurrence features over collection and top docs -----------
-    # global counts: (orig, cand, doc) rows for docs containing both —
-    # both sides read the shared pf_sub cache, pair list is local
-    p = cands.select("orig", "cand").distinct()
-    po = pf_sub.select(F.col("term").alias("orig"), "doc_id").join(
-        F.broadcast(p.select("orig").distinct()), "orig"
+    # --- feedback docs' vectors: ≤ |feedback docs| × |term set| rows ----
+    vecs: Dict[int, Dict[str, int]] = {}
+    fb_ids = sorted({r["doc_id"] for r in topdoc_rows})
+    for r in pf_sub.filter(F.col("doc_id").isin(fb_ids)).collect():
+        vecs.setdefault(r["doc_id"], {})[r["term"]] = r["tf"]
+    # qid -> [(score, {term: tf})] over its top-T docs, in doc_id order
+    fb: Dict[str, list] = {}
+    top_dl_sum: Dict[str, int] = {}
+    for r in sorted(topdoc_rows, key=lambda r: (r["qid"], r["doc_id"])):
+        fb.setdefault(r["qid"], []).append(
+            (r["score"], vecs.get(r["doc_id"], {}))
+        )
+        top_dl_sum[r["qid"]] = top_dl_sum.get(r["qid"], 0) + r["dl"]
+
+    # --- collection counts: pair co-occurrence ∪ per-term df ------------
+    # a term's df is keyed as the pair (t, t): candidate_edges drops the
+    # query's own terms, so no real pair has orig == cand. Per-term df
+    # over pf_sub == vocab.df (one postings row per (term, doc)).
+    p = local_frame(
+        spark,
+        sorted({(r["orig"], r["cand"]) for r in cand_rows}),
+        "orig string, cand string",
     )
-    pc = pf_sub.select(F.col("term").alias("cand"), "doc_id")
-    df_both = (
-        po.join(F.broadcast(p), "orig")
-        .join(pc, ["cand", "doc_id"])
+    counts = (
+        pf_sub.select(F.col("term").alias("orig"), "doc_id")
+        .join(F.broadcast(p), "orig")
+        .join(
+            pf_sub.select(F.col("term").alias("cand"), "doc_id"),
+            ["cand", "doc_id"],
+        )
         .groupBy("orig", "cand")
-        .agg(F.count("*").alias("df_both"))
+        .agg(F.count("*").alias("n"))
+        .unionByName(
+            pf_sub.groupBy("term")
+            .agg(F.count("*").alias("n"))
+            .select(
+                F.col("term").alias("orig"), F.col("term").alias("cand"), "n"
+            )
+        )
     )
-    # feedback-doc counts: the top-doc set is <= queries × topT docs, so
-    # df_both_top never needs the full pair-join — intersect the orig
-    # terms' postings with the top docs (tiny) and join against
-    # cand_in_top per (qid, doc). Same counts as filtering the pair-join
-    # to top docs (both sides are one row per (term, doc)), one wide
-    # postings consumption fewer per layer.
-    orig_in_top = (
-        pf_sub.withColumnRenamed("term", "orig")
-        .join(F.broadcast(cands.select("qid", "orig").distinct()), "orig")
-        .join(F.broadcast(topdocs.select("qid", "doc_id")), ["qid", "doc_id"])
-        .select("qid", "orig", "doc_id")
-    )
-    # no semi-join against the cands edge list here: the driver-side
-    # assembly below only ever looks up (qid, orig, cand) keys that ARE
-    # edges, so extra co-occurring groups are simply never read
-    both_top = (
-        cand_in_top.select("qid", "cand", "doc_id")
-        .join(F.broadcast(orig_in_top), ["qid", "doc_id"])
-        .groupBy("qid", "orig", "cand")
-        .agg(F.count("*").alias("df_both_top"))
-    )
-
-    # The three aggregates are independent and each returns <= pairs
-    # rows → collect them concurrently, then assemble the 14-feature
-    # table driver-side. This is weightRelConcept's own shape (the
-    # reference assembles features in python dicts, :767-891): the
-    # distributed work is the postings intersections above; the
-    # arithmetic below is O(queries × candidates) and scale-free.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        fut_tdf = pool.submit(tdf_agg.collect)
-        fut_fb = pool.submit(fb_agg.collect)
-        fut_db = pool.submit(df_both.collect)
-        fut_bt = pool.submit(both_top.collect)
-        tdf = {r["term"]: r["df"] for r in fut_tdf.result()}
-        fb = {(r["qid"], r["cand"]): r for r in fut_fb.result()}
-        db = {(r["orig"], r["cand"]): r["df_both"] for r in fut_db.result()}
-        bt = {
-            (r["qid"], r["orig"], r["cand"]): r["df_both_top"]
-            for r in fut_bt.result()
-        }
+    tdf: Dict[str, int] = {}
+    db: Dict[tuple, int] = {}
+    for r in counts.collect():
+        if r["orig"] == r["cand"]:
+            tdf[r["orig"]] = r["n"]
+        else:
+            db[(r["orig"], r["cand"])] = r["n"]
 
     # per-(qid, orig, cand) co-occurrence correlations, then avg/max per
     # (qid, cand) — orig terms absent from the vocabulary drop out of
@@ -269,7 +219,7 @@ def concept_features(
             continue
         dfo, dfc = tdf[o], tdf[c]
         dbv = db.get((o, c), 0)
-        btv = bt.get((q, o, c), 0)
+        btv = sum(1 for _, v in fb.get(q, ()) if o in v and c in v)
         pair_lists.setdefault((q, c), []).append((
             dbv / math.sqrt(dfo * dfc),
             btv / float(top_t),
@@ -283,13 +233,16 @@ def concept_features(
     out_rows = []
     for q, c in sorted({(r["qid"], r["cand"]) for r in cand_rows}):
         feat = dict.fromkeys(FEATURES, 0.0)
-        f = fb.get((q, c))
-        if f is not None:
-            feat["expTDocScore"] = float(f["expTDocScore"])
-            feat["numCanDocs"] = float(f["numCanDocs"])
-            feat["avgCDocScore"] = float(f["avgCDocScore"])
-            feat["maxCDocScore"] = float(f["maxCDocScore"])
-            feat["topTermFrac"] = f["tf_top"] / top_dl_sum[q]
+        in_top = [(s, v[c]) for s, v in fb.get(q, ()) if c in v]
+        if in_top:
+            scores = [s for s, _ in in_top]
+            feat["expTDocScore"] = sum(scores)
+            feat["numCanDocs"] = float(len(in_top))
+            feat["avgCDocScore"] = sum(scores) / len(in_top)
+            feat["maxCDocScore"] = max(scores)
+            feat["topTermFrac"] = (
+                sum(tf for _, tf in in_top) / top_dl_sum[q]
+            )
         if c in tdf:
             feat["conIdf"] = math.log(n_docs / tdf[c])
         pl = pair_lists.get((q, c))

@@ -18,7 +18,8 @@ iterative optimizer into a single plan.
 from __future__ import annotations
 
 import random
-from typing import Dict, Tuple
+from contextlib import contextmanager
+from typing import Dict, Iterator, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -31,6 +32,20 @@ from .concept_graph import (
     normalize_and_combine,
     select_expansion_terms,
 )
+
+
+@contextmanager
+def _cached(features: DataFrame) -> Iterator[DataFrame]:
+    """``features`` persisted for the search's many evaluations, and
+    released after it unless the caller had persisted it already."""
+    if features.is_cached:
+        yield features
+        return
+    features = features.persist()
+    try:
+        yield features
+    finally:
+        features.unpersist()
 
 
 def _map_for_weights(
@@ -86,26 +101,28 @@ def coordinate_ascent(
 ) -> Tuple[Dict[str, float], float, list]:
     """-> (best_weights, best_map, history). history = list of
     (feature, tried_value, map) like coordinateAscent/steps.txt."""
-    features = features.persist()
-    weights = dict(init or {f: 1.0 for f in FEATURES})
-    best = _map_for_weights(index, features, query_terms, qrels, weights,
-                            **eval_kw)
-    history = [("init", 0.0, best)]
-    deltas = [d for d in _frange(-step_span, step_span, step) if abs(d) > 1e-12]
-    for _ in range(max_rounds):
-        improved = False
-        for f in FEATURES:
-            base_v = weights[f]
-            for d in deltas:
-                cand = dict(weights)
-                cand[f] = base_v + d
-                m = _map_for_weights(index, features, query_terms, qrels,
-                                     cand, **eval_kw)
-                history.append((f, base_v + d, m))
-                if m > best:
-                    best, weights, improved = m, cand, True
-        if not improved:
-            break
+    with _cached(features) as features:
+        weights = dict(init or {f: 1.0 for f in FEATURES})
+        best = _map_for_weights(index, features, query_terms, qrels,
+                                weights, **eval_kw)
+        history = [("init", 0.0, best)]
+        deltas = [
+            d for d in _frange(-step_span, step_span, step) if abs(d) > 1e-12
+        ]
+        for _ in range(max_rounds):
+            improved = False
+            for f in FEATURES:
+                base_v = weights[f]
+                for d in deltas:
+                    cand = dict(weights)
+                    cand[f] = base_v + d
+                    m = _map_for_weights(index, features, query_terms, qrels,
+                                         cand, **eval_kw)
+                    history.append((f, base_v + d, m))
+                    if m > best:
+                        best, weights, improved = m, cand, True
+            if not improved:
+                break
     return weights, best, history
 
 
@@ -120,19 +137,19 @@ def random_search(
     hi: float = 2.0,
     **eval_kw,
 ) -> Tuple[Dict[str, float], float, list]:
-    features = features.persist()
-    rng = random.Random(seed)
-    best_w = {f: 1.0 for f in FEATURES}
-    best = _map_for_weights(index, features, query_terms, qrels, best_w,
-                            **eval_kw)
-    history = [(dict(best_w), best)]
-    for _ in range(iterations):
-        cand = {f: rng.uniform(lo, hi) for f in FEATURES}
-        m = _map_for_weights(index, features, query_terms, qrels, cand,
-                             **eval_kw)
-        history.append((cand, m))
-        if m > best:
-            best, best_w = m, cand
+    with _cached(features) as features:
+        rng = random.Random(seed)
+        best_w = {f: 1.0 for f in FEATURES}
+        best = _map_for_weights(index, features, query_terms, qrels, best_w,
+                                **eval_kw)
+        history = [(dict(best_w), best)]
+        for _ in range(iterations):
+            cand = {f: rng.uniform(lo, hi) for f in FEATURES}
+            m = _map_for_weights(index, features, query_terms, qrels, cand,
+                                 **eval_kw)
+            history.append((cand, m))
+            if m > best:
+                best, best_w = m, cand
     return best_w, best, history
 
 

@@ -174,23 +174,21 @@ def start_incremental_ann(
 
 
 def _code_frames(spark: SparkSession, out_dir: str, bucket_filter=None):
-    """Base codes + any streamed segments, each root read separately so
-    the bucket filter stays a PartitionFilter on every scan."""
-    frames = []
-    base = spark.read.parquet(os.path.join(out_dir, "codes"))
-    if bucket_filter is not None:
-        base = base.filter(bucket_filter)
-    frames.append(base.select("vec_id", "bucket", "codes"))
+    """Base codes + any streamed segments, one row per vec_id. The bucket
+    filter applies AFTER newest-wins resolution: a streamed update may
+    move a vec_id to another bucket, and filtering first would let its
+    stale base row win in the old bucket. Base-only reads keep the
+    filter as a PartitionFilter on the scan."""
+    base = spark.read.parquet(os.path.join(out_dir, "codes")).select(
+        "vec_id", "bucket", "codes"
+    )
     seg_root = os.path.join(out_dir, "segments")
-    if os.path.isdir(seg_root) and any(
+    if not (os.path.isdir(seg_root) and any(
         e.startswith("segment=") for e in os.listdir(seg_root)
-    ):
-        seg = spark.read.parquet(seg_root)  # partition cols: segment, bucket
-        if bucket_filter is not None:
-            seg = seg.filter(bucket_filter)
-        frames.append(seg.select("vec_id", "bucket", "codes", "segment"))
-    if len(frames) == 1:
-        return frames[0]  # base-only reads skip the exchange
+    )):
+        # base-only reads skip the exchange
+        return base if bucket_filter is None else base.filter(bucket_filter)
+    seg = spark.read.parquet(seg_root)  # partition cols: segment, bucket
     # A vec_id can legitimately appear twice: compact_ann_codes may fold
     # a segment whose stream batch never COMMITTED, and the replayed
     # batch then rewrites the same segment (rows bit-identical under the
@@ -200,10 +198,12 @@ def _code_frames(spark: SparkSession, out_dir: str, bucket_filter=None):
     # base (base rows get priority -1; segment ids are monotone stream
     # batch ids).
     df = (
-        frames[0].withColumn("_prio", F.lit(-1).cast("long"))
+        base.withColumn("_prio", F.lit(-1).cast("long"))
         .unionByName(
-            frames[1].withColumn("_prio", F.col("segment").cast("long"))
-            .drop("segment")
+            seg.select(
+                "vec_id", "bucket", "codes",
+                F.col("segment").cast("long").alias("_prio"),
+            )
         )
         .groupBy("vec_id")
         .agg(
@@ -212,7 +212,7 @@ def _code_frames(spark: SparkSession, out_dir: str, bucket_filter=None):
         .select("vec_id", F.col("_r.bucket").alias("bucket"),
                 F.col("_r.codes").alias("codes"))
     )
-    return df
+    return df if bucket_filter is None else df.filter(bucket_filter)
 
 
 def compact_ann_codes(spark: SparkSession, out_dir: str) -> None:
@@ -253,9 +253,12 @@ def query_ivfpq(
     embeddings: DataFrame | None = None,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """ADC top-k against the published codes. The bucket filter is a
-    PartitionFilter on the parquet scan — only the probed lists' files
-    are opened. ``refine`` re-ranks the shortlist with exact distances
+    """ADC top-k against the published codes. With no streamed segments
+    pending (none, or folded by compact_ann_codes) the bucket filter is
+    a PartitionFilter on the parquet scan — only the probed lists' files
+    are opened; with segments it runs after newest-wins resolution, so
+    a vec_id moved by an update is never served from its old bucket.
+    ``refine`` re-ranks the shortlist with exact distances
     read from the SOURCE ``embeddings`` table (required iff refine)."""
     man, centroids, codebooks = load_ivfpq(out_dir)
     score_round = man["score_round"]
@@ -271,7 +274,7 @@ def query_ivfpq(
     probed = sorted({b for _, b, _ in lut_rows})
     coded = _code_frames(
         spark, out_dir,
-        bucket_filter=F.col("bucket").isin(probed),  # -> partition pruning
+        bucket_filter=F.col("bucket").isin(probed),
     )
     return sim._adc_rank_topk(
         spark, coded, p, k, on_bucket=True, refine=refine,

@@ -27,10 +27,12 @@ from pyspark.sql import functions as F
 
 # Ordered: redaction applies top to bottom, so earlier patterns must not
 # produce text a later pattern matches ("[EMAIL]" etc. contain no digits
-# or '@'). Email runs first so an IP-looking mail host is masked as part
-# of the address, never left half-redacted.
+# or '@'). Email runs first and also takes an IPv4-literal host
+# (user@1.2.3.4), so an IP-looking mail host is masked as part of the
+# address, never left half-redacted.
 PII_PATTERNS = (
-    ("email", r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"),
+    ("email", r"[a-zA-Z0-9._%+-]+@([a-zA-Z0-9.-]+\.[a-zA-Z]{2,}"
+              r"|(\d{1,3}\.){3}\d{1,3}\b)"),
     ("ipv4", r"\b(\d{1,3}\.){3}\d{1,3}\b"),
     ("phone", r"\b\d{3}[-.]\d{3}[-.]\d{4}\b"),
 )

@@ -259,6 +259,59 @@ def test_streamed_update_resolves_newest_wins(spark, emb, codebooks,
         )
 
 
+def test_streamed_move_not_served_from_old_bucket(spark, emb, codebooks,
+                                                  tmp_path_factory):
+    """A streamed update that moves a vec_id to another bucket must hide
+    its base row: a query probing ONLY the old bucket must not return
+    the id, whose current code lives in the new bucket."""
+    root = tmp_path_factory.mktemp("annmove")
+    out = str(root / "idx")
+    drops = str(root / "drops")
+    os.makedirs(drops)
+    cents = sim.ivf_centroids(64, 8, seed=9)
+
+    def as_double(df):
+        return df.select(
+            "vec_id",
+            F.transform("embedding", lambda x: x.cast("double")).alias(
+                "embedding"
+            ),
+        )
+
+    ann.write_ivfpq(
+        as_double(emb.filter(F.col("vec_id") < 100)), out, cents,
+        codebooks, score_round=6,
+    )
+    _, c, cbs = ann.load_ivfpq(out)
+    buckets = {
+        r["vec_id"]: r["bucket"]
+        for r in sim.ivfpq_encode(
+            as_double(emb.filter(F.col("vec_id").between(5, 140))).select(
+                "vec_id", F.col("embedding").alias("vec")
+            ),
+            c, cbs, 6,
+        ).collect()
+    }
+    src = min(v for v in buckets if v >= 100 and buckets[v] != buckets[5])
+    probe = emb.filter(F.col("vec_id") == 5).select(
+        F.lit(0).cast("long").alias("probe_id"), "embedding"
+    )
+
+    def hits():
+        return {
+            r["vec_id"]
+            for r in ann.query_ivfpq(spark, out, probe, k=K, nprobe=1)
+            .collect()
+        }
+
+    assert 5 in hits()  # the probe reaches id 5's original bucket
+    as_double(emb.filter(F.col("vec_id") == src)).withColumn(
+        "vec_id", F.lit(5).cast("long")
+    ).write.mode("append").parquet(drops)
+    ann.start_incremental_ann(spark, drops, out).awaitTermination()
+    assert 5 not in hits()
+
+
 def test_duplicate_components_rejects_nonpositive_iters(spark):
     from sequential_query_expansion_spark.operators import dedup
 

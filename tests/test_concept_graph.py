@@ -117,6 +117,28 @@ def test_sequential_layers(spark, index_tables, qt, graph_df):
     assert (l1.groupby("qid").size() <= 5).all()
 
 
+def test_expansion_jobs_keep_callers_job_group(spark, index_tables, qt,
+                                               graph_df):
+    """Every job a layered expansion runs carries the caller's job group:
+    the expansion runs its jobs on the caller's thread, so the group (a
+    thread-local property) reaches each of them."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("concept-graph-test", "layered expansion")
+    try:
+        cg.sequential_expand(
+            index_tables, qt, graph_df, layers=2,
+            per_layer_terms=(5, 3), layer_weights=(0.3, 0.1), top_t=TOP_T,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    outside = set(tracker.getJobIdsForGroup(None)) - ungrouped
+    assert not outside, sorted(outside)
+    assert tracker.getJobIdsForGroup("concept-graph-test")
+
+
 def test_empty_graph_yields_no_candidates(spark, index_tables, qt):
     """No edges -> empty feature table (schema intact), and the layered
     expansion still returns the layer-0 query terms untouched."""

@@ -283,6 +283,11 @@ class TestPiiScan:
         assert row["n_email"] == 1 and row["n_ipv4"] == 1
         assert row["redacted"] == "x [EMAIL] y"
 
+    def test_email_with_ipv4_literal_host(self, spark):
+        (row,) = pii.pii_scan(_docs(spark, ["x user@1.2.3.4 y"])).collect()
+        assert row["n_email"] == 1 and row["n_ipv4"] == 1
+        assert row["redacted"] == "x [EMAIL] y"
+
     def test_boundaries_hold(self, spark):
         # digits glued to letters are not phones/IPs (\b), and a bare
         # domain without '@' is not an email

@@ -76,6 +76,7 @@ def test_coordinate_ascent_improves_or_holds(spark, index_tables, tiny_corpus):
         index_tables, feats, qt, qrels, {f: 1.0 for f in cg.FEATURES},
         n_terms=5, k=50,
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     w, best, hist = train.coordinate_ascent(
         index_tables, feats, qt, qrels,
         step=0.5, step_span=0.5, max_rounds=1, n_terms=5, k=50,
@@ -83,3 +84,11 @@ def test_coordinate_ascent_improves_or_holds(spark, index_tables, tiny_corpus):
     assert best >= base - 1e-12
     assert len(hist) > 1
     assert set(w) == set(cg.FEATURES)
+    # a search persists only features the caller left unpersisted, and
+    # releases what it persisted
+    _, rs_best, _ = train.random_search(
+        index_tables, feats.filter(F.col("numCanDocs") >= 0), qt, qrels,
+        iterations=0, n_terms=5, k=50,
+    )
+    assert rs_best == pytest.approx(base)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
