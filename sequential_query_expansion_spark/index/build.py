@@ -46,6 +46,7 @@ from pyspark.sql import types as T
 from ..functions.text import explode_term_frequencies, stem_tokens, tokenize_col
 from ..util import local_frame
 from .codec import encode_block
+from .xxh64 import term_bucket_col
 
 BLOCK_SIZE = 128
 
@@ -308,7 +309,7 @@ def build_blocked_postings(
             "max_score",
             F.array_max(F.transform("blocks", lambda b: b["max_score"])),
         )
-        .withColumn("bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int"))
+        .withColumn("bucket", term_bucket_col(num_buckets))
         .select("term", "bucket", "df", "cf", "max_score", "blocks")
     )
     return merged

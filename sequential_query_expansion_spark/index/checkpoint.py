@@ -31,9 +31,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +42,7 @@ from .build import (
     build_index_from_docs,
 )
 from .codec import BLOCK_FORMAT
+from .xxh64 import term_bucket_col
 
 NUM_BUCKETS = 64
 
@@ -85,6 +84,24 @@ def _partition_metrics(df: DataFrame) -> DataFrame:
     )
 
 
+def _write_table(df: DataFrame, path: str, num_buckets: int | None = None,
+                 sort_by: tuple = ("doc_id",), mode: str = "overwrite") -> None:
+    """Write one index table in its on-disk layout. There are two:
+    term-keyed tables (``num_buckets`` given) go to ``bucket=NN``
+    partitions by ``term_bucket_col``, so a reader of one term opens one
+    bucket; doc-keyed tables are globally sorted by ``sort_by`` (doc_id
+    first), so point fetches by doc_id prune parquet row groups by their
+    min/max stats, and the sort's range partitioning gives each output
+    file a contiguous doc span."""
+    if num_buckets is None:
+        df.sort(*sort_by).write.mode(mode).parquet(path)
+    else:
+        (
+            df.withColumn("bucket", term_bucket_col(num_buckets))
+            .write.mode(mode).partitionBy("bucket").parquet(path)
+        )
+
+
 def build_index_checkpointed(
     spark: SparkSession,
     docs: DataFrame,
@@ -109,49 +126,34 @@ def build_index_checkpointed(
     ``with_doc_vectors`` persists the FORWARD index (doc_id, term, tf,
     dl) sorted by doc_id — Indri's stored document vectors (`dumpindex
     dv`, occuranceCount.cpp:631-663). The serving tier's PRF reads the
-    feedback docs' vectors through parquet row-group doc_id pruning."""
+    feedback docs' vectors through parquet row-group doc_id pruning.
+
+    The stages run in order on the caller's thread (flat, blocked, then
+    the optional doc_vectors, docs and positional), so every Spark job
+    carries the caller's job group."""
     os.makedirs(out_dir, exist_ok=True)
     man = _load_manifest(out_dir)
-    # The four post-`flat` stages run CONCURRENTLY on threads (they are
-    # mutually independent Spark jobs); manifest + metrics mutations are
-    # serialized behind this lock so resume bookkeeping stays atomic and
-    # the append-mode metrics writes never share a _temporary dir.
-    man_lock = threading.Lock()
 
-    def stage_done(name: str) -> bool:
-        with man_lock:
-            return name in man["stages"]
-
-    def mark_stage(name: str) -> None:
-        with man_lock:
-            if name not in man["stages"]:
-                man["stages"].append(name)
-                _save_manifest(out_dir, man)
-
-    def append_metrics(stage: str, df_metrics: DataFrame) -> None:
-        with man_lock:
-            _append_metrics(spark, out_dir, stage, df_metrics)
+    def commit(stage: str, path: str) -> None:
+        # a stage enters the manifest only after its writes commit, with
+        # one lineage row per partition of the table it wrote
+        _append_metrics(
+            spark, out_dir, stage, _partition_metrics(spark.read.parquet(path))
+        )
+        man["stages"].append(stage)
+        _save_manifest(out_dir, man)
 
     flat_path = os.path.join(out_dir, "postings_flat")
 
-    if not stage_done("flat"):
+    if "flat" not in man["stages"]:
         t0 = time.perf_counter()
         idx = build_index_from_docs(docs)
-        flat_b = idx.postings_flat.withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-        )
-        flat_b.write.mode("overwrite").partitionBy("bucket").parquet(flat_path)
-        # publish docmap sorted by doc_id: the serving tier's reverse
-        # lookup (LocalSearcher.urls_for) filters on doc_id, and sorted
-        # row-groups let parquet min/max stats prune the scan
-        idx.docmap.sort("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "docmap")
-        )
-        # doc_len sorted too: the serving tier's live-mode init fetches
-        # the tombstoned ids' dls through the same row-group pruning
-        idx.doc_len.sort("doc_id").write.mode("overwrite").parquet(
-            os.path.join(out_dir, "doc_len")
-        )
+        _write_table(idx.postings_flat, flat_path, num_buckets)
+        # docmap and doc_len are doc-keyed: the serving tier's reverse
+        # lookup (LocalSearcher.urls_for) and its live-mode init (the
+        # tombstoned ids' dls) filter on doc_id
+        _write_table(idx.docmap, os.path.join(out_dir, "docmap"))
+        _write_table(idx.doc_len, os.path.join(out_dir, "doc_len"))
         idx.vocab.write.mode("overwrite").parquet(os.path.join(out_dir, "vocab"))
         # every later stage reads the checkpoint, not these caches
         for cached in (idx.doc_terms, idx.postings_flat, idx.vocab):
@@ -168,11 +170,7 @@ def build_index_checkpointed(
                 },
                 f,
             )
-        _append_metrics(
-            spark, out_dir, "flat",
-            _partition_metrics(spark.read.parquet(flat_path)),
-        )
-        mark_stage("flat")
+        commit("flat", flat_path)
 
     with open(os.path.join(out_dir, "stats.json")) as f:
         stats = json.load(f)
@@ -181,11 +179,8 @@ def build_index_checkpointed(
     flat = spark.read.parquet(flat_path)
     postings_path = os.path.join(out_dir, "postings")
 
-    def _stage_blocked() -> None:
-        all_buckets = set(range(num_buckets))
-        with man_lock:
-            done = set(man["buckets_done"])
-        todo = sorted(all_buckets - done)
+    if "blocked" not in man["stages"]:
+        todo = sorted(set(range(num_buckets)) - set(man["buckets_done"]))
         if todo:
             # Crash window: a previous run may have committed bucket=NN
             # dirs on disk but died before recording them in the manifest.
@@ -203,91 +198,49 @@ def build_index_checkpointed(
                 remaining, n_docs, avgdl, salt_ranges=salt_ranges,
                 num_buckets=num_buckets, codec=codec,
             )
-            blocked.write.mode("append").partitionBy("bucket").parquet(
-                postings_path
-            )
+            _write_table(blocked, postings_path, num_buckets, mode="append")
             wall_ms = (time.perf_counter() - t0) * 1000
             written = spark.read.parquet(postings_path).filter(
                 F.col("bucket").isin(todo)
             )
-            append_metrics(
-                "blocked",
+            _append_metrics(
+                spark, out_dir, "blocked",
                 written.groupBy(F.col("bucket").alias("partition_id")).agg(
                     F.count("*").alias("rows")
                 ).withColumn("wall_ms_total", F.lit(wall_ms)),
             )
-            with man_lock:
-                man["buckets_done"] = sorted(
-                    set(man["buckets_done"]) | set(todo)
-                )
-                _save_manifest(out_dir, man)
-        mark_stage("blocked")
+            man["buckets_done"] = sorted(set(man["buckets_done"]) | set(todo))
+            _save_manifest(out_dir, man)
+        man["stages"].append("blocked")
+        _save_manifest(out_dir, man)
 
-    def _stage_doc_vectors() -> None:
-        # forward index, ONE global doc_id sort so the serving tier's
-        # fb-doc fetch prunes row groups (same publish-time-sort policy
-        # as the docmap); range-partitioned on doc_id by the sort, so at
-        # cluster scale each output file covers a contiguous doc span
+    if with_doc_vectors and "doc_vectors" not in man["stages"]:
+        # forward index, doc-keyed and sorted by term within a doc
         dv_path = os.path.join(out_dir, "doc_vectors")
-        flat.drop("bucket").select("doc_id", "term", "tf", "dl").sort(
-            "doc_id", "term"
-        ).write.mode("overwrite").parquet(dv_path)
-        append_metrics(
-            "doc_vectors", _partition_metrics(spark.read.parquet(dv_path))
+        _write_table(
+            flat.select("doc_id", "term", "tf", "dl"), dv_path,
+            sort_by=("doc_id", "term"),
         )
-        mark_stage("doc_vectors")
+        commit("doc_vectors", dv_path)
 
-    def _stage_docs() -> None:
+    if with_docs and "docs" not in man["stages"]:
         # stored document table — Indri's CompressedCollection (parquet
         # columns are already compressed), backing `dumpindex dt/dd/dcsv`
-        # (occuranceCount.cpp:516-523, :551-593, :595-630). Sorted by
-        # doc_id so point fetches prune row groups, same policy as docmap.
+        # (occuranceCount.cpp:516-523, :551-593, :595-630)
         docs_path = os.path.join(out_dir, "docs")
-        docs.sort("doc_id").write.mode("overwrite").parquet(docs_path)
-        append_metrics(
-            "docs", _partition_metrics(spark.read.parquet(docs_path))
-        )
-        mark_stage("docs")
+        _write_table(docs, docs_path)
+        commit("docs", docs_path)
 
-    def _stage_positional() -> None:
+    if with_positions and "positional" not in man["stages"]:
         from ..functions.text import tokenize_col
         from .positions import build_positional_postings
 
         doc_terms = docs.select(
             "doc_id", tokenize_col(F.col("text")).alias("tokens")
         )
-        pos = build_positional_postings(doc_terms).withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-        )
         pos_path = os.path.join(out_dir, "positional")
-        pos.write.mode("overwrite").partitionBy("bucket").parquet(pos_path)
-        append_metrics(
-            "positional", _partition_metrics(spark.read.parquet(pos_path))
-        )
-        mark_stage("positional")
-
-    # Everything after `flat` is an independent Spark job chain over
-    # either the flat checkpoint or the raw docs — run the pending ones
-    # concurrently so a cluster's executors stay busy through each
-    # stage's scheduling/commit tail instead of idling between four
-    # serial jobs. Resume semantics are unchanged: each stage still
-    # marks itself in the manifest only after its own writes commit.
-    pending = []
-    if not stage_done("blocked"):
-        pending.append(_stage_blocked)
-    if with_doc_vectors and not stage_done("doc_vectors"):
-        pending.append(_stage_doc_vectors)
-    if with_docs and not stage_done("docs"):
-        pending.append(_stage_docs)
-    if with_positions and not stage_done("positional"):
-        pending.append(_stage_positional)
-    if len(pending) == 1:
-        pending[0]()
-    elif pending:
-        with ThreadPoolExecutor(max_workers=len(pending)) as pool:
-            futures = [pool.submit(fn) for fn in pending]
-            for fut in futures:
-                fut.result()   # propagate the first stage failure
+        _write_table(build_positional_postings(doc_terms), pos_path, num_buckets)
+        commit("positional", pos_path)
 
     return load_index(spark, out_dir)
 
@@ -365,8 +318,6 @@ def load_index(spark: SparkSession, out_dir: str) -> IndexTables:
 def invalidate_buckets(out_dir: str, buckets: list) -> None:
     """Testing/maintenance hook: mark buckets as not-done so the next
     build re-encodes them (simulates a mid-build crash)."""
-    import shutil
-
     man = _load_manifest(out_dir)
     man["buckets_done"] = [b for b in man["buckets_done"] if b not in buckets]
     if "blocked" in man["stages"]:

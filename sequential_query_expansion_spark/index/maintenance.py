@@ -30,8 +30,6 @@ import json
 import os
 import shutil
 import uuid
-from concurrent.futures import ThreadPoolExecutor
-from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,8 +39,11 @@ from .checkpoint import (
     _append_metrics,
     _load_manifest,
     _save_manifest,
+    _write_table,
     load_index,
+    validate_index_dir,
 )
+from .codec import BLOCK_FORMAT, CODECS
 from ..util import local_frame
 
 _TOMB = "tombstones"
@@ -109,20 +110,36 @@ def load_index_live(spark: SparkSession, out_dir: str) -> IndexTables:
     )
 
 
-def _rewrite_buckets(spark: SparkSession, root: str, affected: list,
-                     tomb: DataFrame | None) -> None:
-    """Rewrite the affected bucket=NN partitions of ``root`` in ONE
-    Spark job: filter + anti-join + write to a staging dir partitioned
-    by bucket, then swap the partition dirs driver-side (metadata-only
-    moves). A serial per-bucket loop schedules one job per bucket —
-    fine at 64 buckets, hostile at the thousands a 10^12-doc table
-    carries. A bucket whose rows are ALL tombstoned produces no staging
-    partition and its stale dir is simply removed."""
+def _rewrite_buckets(spark: SparkSession, root: str,
+                     tomb: DataFrame | None) -> list:
+    """Rewrite the bucket=NN partitions of ``root`` that hold tombstoned
+    rows (every bucket when there are no tombstones: plain small-file
+    compaction) in ONE Spark job: filter + anti-join + write to a
+    staging dir partitioned by bucket, then swap the partition dirs
+    driver-side (metadata-only moves). A serial per-bucket loop
+    schedules one job per bucket — fine at 64 buckets, hostile at the
+    thousands a 10^12-doc table carries. A bucket whose rows are ALL
+    tombstoned produces no staging partition and its stale dir is simply
+    removed. Returns the rewritten buckets."""
+    table = spark.read.parquet(root)
+    if tomb is None:
+        affected = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(root)
+            if d.startswith("bucket=")
+        )
+    else:
+        tomb = F.broadcast(tomb)
+        affected = sorted(
+            r["bucket"]
+            for r in table.join(tomb, "doc_id", "left_semi")
+            .select("bucket").distinct().collect()
+        )
     if not affected:
-        return
-    kept = spark.read.parquet(root).filter(F.col("bucket").isin(affected))
+        return affected
+    kept = table.filter(F.col("bucket").isin(affected))
     if tomb is not None:
-        kept = kept.join(F.broadcast(tomb), "doc_id", "left_anti")
+        kept = kept.join(tomb, "doc_id", "left_anti")
     staging = root + ".compact.tmp"
     if os.path.isdir(staging):
         shutil.rmtree(staging)
@@ -138,6 +155,7 @@ def _rewrite_buckets(spark: SparkSession, root: str, affected: list,
         if os.path.isdir(src):
             os.replace(src, dst)
     shutil.rmtree(staging)
+    return affected
 
 
 def compact_index(spark: SparkSession, out_dir: str,
@@ -158,7 +176,6 @@ def compact_index(spark: SparkSession, out_dir: str,
     VERDICT r1 correctly flagged stale bounds as a pruning-soundness
     hazard). Also serves as plain small-file compaction when there are
     no tombstones (each bucket rewritten to one file)."""
-    from .codec import CODECS
     if codec not in CODECS:
         raise ValueError(f"unknown codec {codec!r}; choose from {CODECS}")
     # in-progress sentinel: every rewrite below is idempotent while the
@@ -178,7 +195,6 @@ def compact_index(spark: SparkSession, out_dir: str,
 
     tomb = tombstones(spark, out_dir)
     flat_root = os.path.join(out_dir, "postings_flat")
-    flat_all = spark.read.parquet(flat_root)
 
     # restore any doc table a previous crashed compact left parked as
     # <stage>.compact.tmp BEFORE anything reads those tables — the
@@ -209,104 +225,46 @@ def compact_index(spark: SparkSession, out_dir: str,
                 "an empty index — remove the index directory instead"
             )
 
-    def _rw_flat() -> None:
-        if tomb is not None:
-            # bucket-pruned rewrite: only buckets holding tombstoned rows
-            affected = sorted(
-                r["bucket"]
-                for r in flat_all
-                .join(F.broadcast(tomb), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        else:
-            # pure small-file compaction: every bucket → one file
-            affected = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(flat_root)
-                if d.startswith("bucket=")
-            )
-        _rewrite_buckets(spark, flat_root, affected, tomb)
-        _append_metrics(
-            spark, out_dir, "compact_flat",
-            local_frame(
-                spark,
-                [(b, 1) for b in affected] or [(-1, 0)],
-                "partition_id int, rows long",
-            ),
-        )
-
+    # the rewrites run in order on the caller's thread, so every job
+    # carries the caller's job group; the _COMPACTING sentinel fences
+    # readers for the whole window, and each table swaps atomically
+    affected = _rewrite_buckets(spark, flat_root, tomb)
+    _append_metrics(
+        spark, out_dir, "compact_flat",
+        local_frame(
+            spark,
+            [(b, 1) for b in affected] or [(-1, 0)],
+            "partition_id int, rows long",
+        ),
+    )
     pos_root = os.path.join(out_dir, "positional")
-
-    def _rw_positional() -> None:
-        # positional stage (if built): same bucket-pruned rewrite
-        if tomb is not None:
-            pos_affected = sorted(
-                r["bucket"]
-                for r in spark.read.parquet(pos_root)
-                .join(F.broadcast(tomb), "doc_id", "left_semi")
-                .select("bucket").distinct().collect()
-            )
-        else:
-            pos_affected = sorted(
-                int(d.split("=", 1)[1])
-                for d in os.listdir(pos_root)
-                if d.startswith("bucket=")
-            )
-        _rewrite_buckets(spark, pos_root, pos_affected, tomb)
-
-    def _rw_doc_table(name: str) -> None:
-        p = os.path.join(out_dir, name)
-        tmp = p + ".compact.tmp"
-        # crash recovery (a previous run dying between rmtree(p) and
-        # os.replace(tmp, p)) already ran above, before the
-        # zero-survivor guard's docmap read
-        if name in ("doc_vectors", "docs") and not os.path.isdir(p):
-            return  # optional stages, never published
-        kept = spark.read.parquet(p).join(
-            F.broadcast(tomb), "doc_id", "left_anti"
-        ).sort("doc_id")  # keep the publish-time doc_id sort
-        kept.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(p)
-        os.replace(tmp, p)
-
-    # The flat rewrite, positional rewrite, and each doc-table rewrite
-    # touch disjoint directories and disjoint Spark inputs — run them as
-    # concurrent jobs instead of six serial ones (same per-table swap
-    # atomicity; the _COMPACTING sentinel already fences readers for the
-    # whole window, so intermediate orderings are unobservable).
-    rewrites = [_rw_flat]
     if os.path.isdir(pos_root):
-        rewrites.append(_rw_positional)
+        _rewrite_buckets(spark, pos_root, tomb)
     if tomb is not None:
         for name in ("docmap", "doc_len", "doc_vectors", "docs"):
-            rewrites.append(partial(_rw_doc_table, name))
-    if len(rewrites) == 1:
-        rewrites[0]()
-    else:
-        with ThreadPoolExecutor(max_workers=len(rewrites)) as pool:
-            for fut in [pool.submit(fn) for fn in rewrites]:
-                fut.result()
+            p = os.path.join(out_dir, name)
+            if not os.path.isdir(p):
+                continue  # doc_vectors and docs are optional stages
+            # crash recovery (a previous run dying between rmtree(p) and
+            # os.replace(tmp, p)) already ran above, before the
+            # zero-survivor guard's docmap read
+            tmp = p + ".compact.tmp"
+            _write_table(
+                spark.read.parquet(p).join(F.broadcast(tomb), "doc_id", "left_anti"),
+                tmp,
+            )
+            shutil.rmtree(p)
+            os.replace(tmp, p)
 
     flat = spark.read.parquet(flat_root).drop("bucket")
-
-    def _refresh_vocab() -> None:
-        vocab = flat.groupBy("term").agg(
-            F.count("*").alias("df"), F.sum("tf").alias("cf")
-        )
-        vp = os.path.join(out_dir, "vocab")
-        tmpv = vp + ".compact.tmp"
-        vocab.write.mode("overwrite").parquet(tmpv)
-        if os.path.isdir(vp):
-            shutil.rmtree(vp)
-        os.replace(tmpv, vp)
-
-    # vocab refresh is independent of the blocked re-encode below (which
-    # only needs the refreshed stats) — overlap it with the long pole;
-    # the future is joined before the tombstones/sentinel are cleared,
-    # and a vocab failure (sentinel left in place) is repaired by simply
-    # re-running compact, same as every other partial state
-    vocab_pool = ThreadPoolExecutor(max_workers=1)
-    vocab_fut = vocab_pool.submit(_refresh_vocab)
+    vocab = flat.groupBy("term").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    )
+    vp = os.path.join(out_dir, "vocab")
+    vocab.write.mode("overwrite").parquet(vp + ".compact.tmp")
+    if os.path.isdir(vp):
+        shutil.rmtree(vp)
+    os.replace(vp + ".compact.tmp", vp)
 
     agg = spark.read.parquet(os.path.join(out_dir, "doc_len")).agg(
         F.count("*").alias("n"), F.avg("dl").alias("avgdl")
@@ -314,7 +272,6 @@ def compact_index(spark: SparkSession, out_dir: str,
     stats["n_docs"] = int(agg["n"] or 0)
     stats["avgdl"] = float(agg["avgdl"] or 0.0)
     # compact re-encodes every block with this version's writer
-    from .codec import BLOCK_FORMAT
     stats["block_format"] = BLOCK_FORMAT
 
     # blocked re-encode (global: max_score embeds the refreshed stats).
@@ -334,7 +291,7 @@ def compact_index(spark: SparkSession, out_dir: str,
     )
     bp = os.path.join(out_dir, "postings")
     tmpb = bp + ".compact.tmp"
-    blocked.write.mode("overwrite").partitionBy("bucket").parquet(tmpb)
+    _write_table(blocked, tmpb, num_buckets)
     with open(os.path.join(tmpb, "_GENERATION"), "w") as f:
         f.write(generation)
     old_bp = bp + ".compact.old"
@@ -349,10 +306,6 @@ def compact_index(spark: SparkSession, out_dir: str,
     os.replace(sp + ".tmp", sp)          # atomic: stats+blocked now agree
     if os.path.isdir(old_bp):
         shutil.rmtree(old_bp)
-    try:
-        vocab_fut.result()
-    finally:
-        vocab_pool.shutdown(wait=True)
 
     man = _load_manifest(out_dir)
     man["buckets_done"] = sorted(range(num_buckets))
@@ -388,8 +341,6 @@ def merge_indexes(
     Inputs with pending tombstones are refused: merging their raw
     postings would resurrect deleted docs — compact them first.
     """
-    from .checkpoint import validate_index_dir
-
     if not input_dirs:
         raise ValueError("merge needs at least one input index")
     all_stats = []
@@ -461,44 +412,21 @@ def merge_indexes(
             out = out.unionByName(shifted(sub, i))
         return out
 
-    flat = union_stage("postings_flat").drop("bucket").withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
+    _write_table(
+        union_stage("postings_flat"), os.path.join(out_dir, "postings_flat"),
+        num_buckets,
     )
-    flat.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(out_dir, "postings_flat")
-    )
-    union_stage("docmap").sort("doc_id").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "docmap")
-    )
-    union_stage("doc_len").sort("doc_id").write.mode("overwrite").parquet(
-        os.path.join(out_dir, "doc_len")
-    )
+    for sub in ("docmap", "doc_len"):
+        _write_table(union_stage(sub), os.path.join(out_dir, sub))
     stages = ["flat", "blocked"]
-    for sub in ("docs", "doc_vectors"):
-        if all(
-            os.path.isdir(os.path.join(input_dirs[i], sub)) for i in live
-        ):
-            union_stage(sub).sort("doc_id").write.mode("overwrite").parquet(
-                os.path.join(out_dir, sub)
-            )
+    for sub, buckets in (("docs", None), ("doc_vectors", None),
+                         ("positional", num_buckets)):
+        if all(os.path.isdir(os.path.join(input_dirs[i], sub)) for i in live):
+            _write_table(union_stage(sub), os.path.join(out_dir, sub), buckets)
             stages.append(sub)
-    if all(
-        os.path.isdir(os.path.join(input_dirs[i], "positional")) for i in live
-    ):
-        pos = union_stage("positional").drop("bucket").withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")
-        )
-        pos.write.mode("overwrite").partitionBy("bucket").parquet(
-            os.path.join(out_dir, "positional")
-        )
-        stages.append("positional")
-
-    import json as _json
-
-    from .codec import BLOCK_FORMAT
 
     with open(os.path.join(out_dir, "stats.json"), "w") as f:
-        _json.dump(
+        json.dump(
             {
                 "n_docs": off,
                 "avgdl": 0.0,  # recomputed by compact_index below

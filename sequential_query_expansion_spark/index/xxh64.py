@@ -1,21 +1,26 @@
 """Pure-Python XXH64 matching Spark's ``F.xxhash64`` on string columns.
 
-The blocked postings and positional postings are written partitioned by
-``bucket = pmod(xxhash64(term), num_buckets)`` (index/build.py:340,
-checkpoint.py:121). A client that wants to read ONE term's postings
-without Spark (scoring/local.py, the serving tier) must recompute that
-bucket exactly: Spark's XxHash64 expression is standard XXH64 with seed
-42 over the column's UTF-8 bytes, so a faithful reimplementation lets
-the reader prune 63 of 64 bucket directories before touching parquet.
+The term-keyed index tables (flat, blocked and positional postings) are
+written partitioned by ``bucket = pmod(xxhash64(term), num_buckets)``:
+``term_bucket_col`` below, the one column every writer uses. A client
+that wants to read ONE term's postings without Spark (scoring/local.py,
+the serving tier) must recompute that bucket exactly: Spark's XxHash64
+expression is standard XXH64 with seed 42 over the column's UTF-8
+bytes, so a faithful reimplementation lets the reader prune 63 of 64
+bucket directories before touching parquet.
 
-Parity with Spark is pinned by tests/test_local_search.py (empty string,
-ASCII, multi-byte UTF-8, >32-byte inputs covering every tail path).
+Parity of ``term_bucket`` with ``term_bucket_col`` is pinned by
+tests/test_local_search.py (empty string, ASCII, multi-byte UTF-8,
+>32-byte inputs covering every tail path).
 
 Speed is irrelevant here — this hashes a handful of query terms per
 request, never a corpus (the build-side hashing stays in the JVM).
 """
 
 from __future__ import annotations
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 _P1 = 0x9E3779B185EBCA87
 _P2 = 0xC2B2AE3D27D4EB4F
@@ -91,3 +96,9 @@ def spark_xxhash64(s: str, seed: int = SPARK_SEED) -> int:
 def term_bucket(term: str, num_buckets: int) -> int:
     """``pmod(xxhash64(term), num_buckets)`` — the build's bucket id."""
     return spark_xxhash64(term) % num_buckets
+
+
+def term_bucket_col(num_buckets: int) -> Column:
+    """The Spark twin of ``term_bucket``: the bucket column every
+    term-keyed index table is partitioned by."""
+    return F.pmod(F.xxhash64("term"), F.lit(num_buckets)).cast("int")

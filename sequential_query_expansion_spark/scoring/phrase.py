@@ -202,17 +202,15 @@ def phrase_weighted_topk(
 
     parts = [term_contrib]
     if phrase_clauses is not None:
-        # pm is read twice (clause df aggregate + per-doc contributions);
-        # persist so the positional join + window kernel run ONCE — it is
-        # tiny by construction (docs that match the phrase)
-        pm = phrase_match_counts(positional, phrase_clauses).persist()
-        clause_df = pm.groupBy("clause_id").agg(
-            F.count("*").cast("double").alias("df")
+        # the clause df (docs with >= 1 match) is a window over the same
+        # rows, so the positional join + match kernel run once, uncached
+        pm = phrase_match_counts(positional, phrase_clauses).withColumn(
+            "df",
+            F.count("*").over(Window.partitionBy("clause_id")).cast("double"),
         )
         weights = phrase_clauses.select("clause_id", "weight")
         phrase_contrib = (
-            pm.join(F.broadcast(clause_df), "clause_id")
-            .join(F.broadcast(weights), "clause_id")
+            pm.join(F.broadcast(weights), "clause_id")
             .join(index.doc_len, "doc_id")
             .select(
                 "qid",

@@ -65,28 +65,28 @@ def test_build_resume_identical(spark, docs_df, tmp_path_factory):
     assert set(man["buckets_done"]) == set(range(16))
 
 
-def test_lineage_metrics_written(spark, docs_df, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("idx_metrics"))
-    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8)
-    m = spark.read.parquet(os.path.join(out, "build_metrics"))
-    stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert {"flat", "blocked"} <= stages
-    assert m.filter(F.col("rows") <= 0).count() == 0
-
-
 def _persisted_rdds(spark):
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 @pytest.fixture(scope="module")
 def built_index(spark, docs_df, tmp_path_factory):
-    """A checkpointed build loaded back from disk, and the number of
-    persisted RDDs the build left behind."""
+    """A checkpointed build (with the positional stage) loaded back from
+    disk, the number of persisted RDDs the build left behind, and its
+    directory."""
     docs_df.count()  # the fixture's own cache counts as already there
     before = _persisted_rdds(spark)
     out = str(tmp_path_factory.mktemp("idx_load"))
-    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8)
-    return cp.load_index(spark, out), _persisted_rdds(spark) - before
+    cp.build_index_checkpointed(spark, docs_df, out, num_buckets=8,
+                                with_positions=True)
+    return cp.load_index(spark, out), _persisted_rdds(spark) - before, out
+
+
+def test_lineage_metrics_written(spark, built_index):
+    m = spark.read.parquet(os.path.join(built_index[2], "build_metrics"))
+    stages = {r["stage"] for r in m.select("stage").distinct().collect()}
+    assert {"flat", "blocked"} <= stages
+    assert m.filter(F.col("rows") <= 0).count() == 0
 
 
 def test_loaded_index_queries(spark, built_index, tiny_corpus):
@@ -99,16 +99,27 @@ def test_loaded_index_queries(spark, built_index, tiny_corpus):
     assert res.count() > 0
 
 
-@pytest.mark.parametrize("case", ["build_index_checkpointed", "two_stage_topk"])
+@pytest.mark.parametrize(
+    "case", ["build_index_checkpointed", "two_stage_topk", "phrase_weighted_topk"]
+)
 def test_leaves_no_persisted_rdds(spark, built_index, tiny_corpus, case):
     from sequential_query_expansion_spark.scoring.bm25 import query_term_table
     from sequential_query_expansion_spark.scoring.lm import two_stage_topk
+    from sequential_query_expansion_spark.scoring.phrase import (
+        concept_query_topk,
+    )
 
-    idx, build_leaked = built_index
+    idx, build_leaked, _ = built_index
     if case == "build_index_checkpointed":
         assert build_leaked == 0
-    else:
+        return
+    before = _persisted_rdds(spark)
+    if case == "two_stage_topk":
         qt = query_term_table(spark.createDataFrame(tiny_corpus.queries))
-        before = _persisted_rdds(spark)
         assert two_stage_topk(idx, qt, k=5).count() > 0
-        assert _persisted_rdds(spark) == before
+    else:
+        # goes through phrase_weighted_topk with #od/#uw phrase clauses
+        concepts = {"c1": "term00000 term00001", "c2": "term00002 term00000"}
+        res = concept_query_topk(spark, idx, idx.positional, concepts, k=5)
+        assert res.count() > 0
+    assert _persisted_rdds(spark) == before

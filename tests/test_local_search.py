@@ -17,6 +17,7 @@ from sequential_query_expansion_spark.index.checkpoint import (
 from sequential_query_expansion_spark.index.xxh64 import (
     spark_xxhash64,
     term_bucket,
+    term_bucket_col,
 )
 from sequential_query_expansion_spark.scoring.bm25 import score_topk
 from sequential_query_expansion_spark.scoring.local import LocalSearcher
@@ -38,7 +39,7 @@ def test_xxh64_matches_spark(spark):
     rows = df.select(
         "term",
         F.xxhash64("term").alias("h"),
-        F.pmod(F.xxhash64("term"), F.lit(64)).cast("int").alias("b"),
+        term_bucket_col(64).alias("b"),
     ).collect()
     for r in rows:
         assert spark_xxhash64(r["term"]) == r["h"], r["term"]

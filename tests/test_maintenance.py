@@ -434,3 +434,43 @@ def test_merge_clears_stale_out_dir_state(spark, tmp_path_factory):
     assert not os.path.isdir(os.path.join(out, "tombstones"))
     # inputs carry no docs stage -> merged index must not either
     assert not os.path.isdir(os.path.join(out, "docs"))
+
+
+def test_index_writes_keep_callers_job_group(spark, docs_df, tmp_path_factory):
+    """Every job of a checkpointed build with all optional stages, a
+    tombstoned compact and a merge carries the caller's job group: each
+    runs its stages in order on the caller's thread, so the group (a
+    thread-local property) reaches every job."""
+    root = tmp_path_factory.mktemp("jobgroup")
+    idx_dir = str(root / "idx")
+    docs = docs_df.filter(F.col("doc_id") < 60)
+
+    def build():
+        build_index_checkpointed(
+            spark, docs, idx_dir, salt_ranges=2, num_buckets=4,
+            with_positions=True, with_doc_vectors=True, with_docs=True,
+        )
+
+    def compact():
+        mt.delete_docs(spark, idx_dir, [1, 2, 40])
+        mt.compact_index(spark, idx_dir)
+
+    def merge():
+        mt.merge_indexes(spark, str(root / "merged"), [idx_dir, idx_dir])
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    outside = {}
+    for call in (build, compact, merge):
+        ungrouped = set(tracker.getJobIdsForGroup(None))
+        sc.setJobGroup("index-write-test", call.__name__)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        new = set(tracker.getJobIdsForGroup(None)) - ungrouped
+        if new:
+            outside[call.__name__] = sorted(new)
+    assert not outside, outside
+    assert tracker.getJobIdsForGroup("index-write-test")
