@@ -97,11 +97,7 @@ def main() -> int:
     for name in sorted(queries):
         try:
             got = queries[name](spark, args.sf).toPandas()
-            if name in oracles:
-                rec = compare(got, con.execute(oracles[name]).df())
-            else:  # rows-only entry (none today; kept for shape parity)
-                rec = dict(failed, spark_rows=len(got),
-                           err="no oracle (rows-only entry)")
+            rec = compare(got, con.execute(oracles[name]).df())
         except Exception as e:  # noqa: BLE001 — record, keep going
             rec = dict(failed, err=f"{type(e).__name__}: {e}")
         rec["err"] = rec["err"] and rec["err"][:300]

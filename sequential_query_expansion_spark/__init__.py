@@ -11,7 +11,7 @@ pipeline) as an idiomatic PySpark DataFrame engine:
   concept-graph sequential expansion (the reference's 14-feature selector)
 - TREC-style evaluation (MAP / P@k / NDCG) as DataFrame aggregations
 - training-data pipeline operators: dedup (exact / MinHash-LSH / SimHash),
-  similarity search, text analysis, multimodal column plumbing
+  similarity search, text analysis
 
 Everything derives from public knowledge: the Apache Spark API and the
 reference repo's observable behavior (cited by file:line in docstrings).

@@ -16,7 +16,9 @@ Layout under ``out_dir``:
     postings/                    — blocked+compressed, partitioned by bucket=NN
     manifest.json                — stages done + buckets done (postings)
     build_metrics/               — lineage: one row per (stage, partition)
-                                   with rows, wall_ms, status, ts
+                                   with rows and ts (blocked rows add
+                                   wall_ms_total); compact appends
+                                   compact_* rows per table it rewrites
 
 Resume: a stage listed in the manifest is loaded, not rebuilt; for the
 blocked-postings stage only the MISSING buckets are encoded and appended
@@ -76,11 +78,16 @@ def _append_metrics(spark: SparkSession, out_dir: str, stage: str,
     )
 
 
-def _partition_metrics(df: DataFrame) -> DataFrame:
-    """(partition_id, rows) for lineage — computed in the same pass shape
-    the write uses (no extra shuffle: spark_partition_id is free)."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count("*").alias("rows")
+def _record_lineage(spark: SparkSession, out_dir: str, stage: str,
+                    path: str) -> None:
+    """Append one lineage row (partition_id, rows) per partition of the
+    table written at ``path``, read back from disk, so the rows sum to
+    what it holds (no extra shuffle: spark_partition_id is free)."""
+    _append_metrics(
+        spark, out_dir, stage,
+        spark.read.parquet(path)
+        .groupBy(F.spark_partition_id().alias("partition_id"))
+        .agg(F.count("*").alias("rows")),
     )
 
 
@@ -137,9 +144,7 @@ def build_index_checkpointed(
     def commit(stage: str, path: str) -> None:
         # a stage enters the manifest only after its writes commit, with
         # one lineage row per partition of the table it wrote
-        _append_metrics(
-            spark, out_dir, stage, _partition_metrics(spark.read.parquet(path))
-        )
+        _record_lineage(spark, out_dir, stage, path)
         man["stages"].append(stage)
         _save_manifest(out_dir, man)
 

@@ -38,6 +38,7 @@ from .build import IndexTables, build_blocked_postings
 from .checkpoint import (
     _append_metrics,
     _load_manifest,
+    _record_lineage,
     _save_manifest,
     _write_table,
     load_index,
@@ -111,7 +112,7 @@ def load_index_live(spark: SparkSession, out_dir: str) -> IndexTables:
 
 
 def _rewrite_buckets(spark: SparkSession, root: str,
-                     tomb: DataFrame | None) -> list:
+                     tomb: DataFrame | None) -> None:
     """Rewrite the bucket=NN partitions of ``root`` that hold tombstoned
     rows (every bucket when there are no tombstones: plain small-file
     compaction) in ONE Spark job: filter + anti-join + write to a
@@ -120,7 +121,7 @@ def _rewrite_buckets(spark: SparkSession, root: str,
     schedules one job per bucket — fine at 64 buckets, hostile at the
     thousands a 10^12-doc table carries. A bucket whose rows are ALL
     tombstoned produces no staging partition and its stale dir is simply
-    removed. Returns the rewritten buckets."""
+    removed."""
     table = spark.read.parquet(root)
     if tomb is None:
         affected = sorted(
@@ -136,7 +137,7 @@ def _rewrite_buckets(spark: SparkSession, root: str,
             .select("bucket").distinct().collect()
         )
     if not affected:
-        return affected
+        return
     kept = table.filter(F.col("bucket").isin(affected))
     if tomb is not None:
         kept = kept.join(tomb, "doc_id", "left_anti")
@@ -155,7 +156,6 @@ def _rewrite_buckets(spark: SparkSession, root: str,
         if os.path.isdir(src):
             os.replace(src, dst)
     shutil.rmtree(staging)
-    return affected
 
 
 def compact_index(spark: SparkSession, out_dir: str,
@@ -227,19 +227,15 @@ def compact_index(spark: SparkSession, out_dir: str,
 
     # the rewrites run in order on the caller's thread, so every job
     # carries the caller's job group; the _COMPACTING sentinel fences
-    # readers for the whole window, and each table swaps atomically
-    affected = _rewrite_buckets(spark, flat_root, tomb)
-    _append_metrics(
-        spark, out_dir, "compact_flat",
-        local_frame(
-            spark,
-            [(b, 1) for b in affected] or [(-1, 0)],
-            "partition_id int, rows long",
-        ),
-    )
+    # readers for the whole window, and each table swaps atomically.
+    # Each rewritten table then gets fresh lineage rows read back from
+    # disk (stage compact_*), so they sum to what the table holds.
+    _rewrite_buckets(spark, flat_root, tomb)
+    _record_lineage(spark, out_dir, "compact_flat", flat_root)
     pos_root = os.path.join(out_dir, "positional")
     if os.path.isdir(pos_root):
         _rewrite_buckets(spark, pos_root, tomb)
+        _record_lineage(spark, out_dir, "compact_positional", pos_root)
     if tomb is not None:
         for name in ("docmap", "doc_len", "doc_vectors", "docs"):
             p = os.path.join(out_dir, name)
@@ -255,6 +251,7 @@ def compact_index(spark: SparkSession, out_dir: str,
             )
             shutil.rmtree(p)
             os.replace(tmp, p)
+            _record_lineage(spark, out_dir, f"compact_{name}", p)
 
     flat = spark.read.parquet(flat_root).drop("bucket")
     vocab = flat.groupBy("term").agg(
@@ -306,6 +303,7 @@ def compact_index(spark: SparkSession, out_dir: str,
     os.replace(sp + ".tmp", sp)          # atomic: stats+blocked now agree
     if os.path.isdir(old_bp):
         shutil.rmtree(old_bp)
+    _record_lineage(spark, out_dir, "compact_blocked", bp)
 
     man = _load_manifest(out_dir)
     man["buckets_done"] = sorted(range(num_buckets))

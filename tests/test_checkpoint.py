@@ -4,6 +4,7 @@ lineage rows (SURVEY §5 test item 4)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -36,13 +37,14 @@ def _postings_signature(spark, out_dir):
 
 def test_build_resume_identical(spark, docs_df, tmp_path_factory):
     out1 = str(tmp_path_factory.mktemp("idx_full"))
-    out2 = str(tmp_path_factory.mktemp("idx_resume"))
+    out2 = str(tmp_path_factory.mktemp("idx_resume") / "idx")
 
     idx1 = cp.build_index_checkpointed(spark, docs_df, out1, num_buckets=16)
     sig_full = _postings_signature(spark, out1)
 
-    # build #2, then simulate a crash that lost 5 buckets mid-merge
-    cp.build_index_checkpointed(spark, docs_df, out2, num_buckets=16)
+    # a copy of the finished build, then simulate a crash that lost 5
+    # buckets mid-merge
+    shutil.copytree(out1, out2)
     lost = [1, 3, 7, 8, 15]
     cp.invalidate_buckets(out2, lost)
     man = cp._load_manifest(out2)

@@ -231,6 +231,16 @@ def test_compact_purges_doc_vectors_stage(spark, docs_df, tmp_path_factory):
     res = s.rm3_topk(["term00000", "term00001"], k=20, fb_docs=5, fb_terms=10)
     assert res and not {d for d, _ in res} & set(DELETED)
 
+    # the newest lineage rows of each table compact rewrote sum to the
+    # rows that table now holds
+    m = spark.read.parquet(os.path.join(out, "build_metrics")).toPandas()
+    for stage, table in (("compact_flat", "postings_flat"),
+                         ("compact_doc_vectors", "doc_vectors")):
+        rows = m[m.stage == stage]
+        newest = rows[rows.ts == rows.ts.max()]
+        held = spark.read.parquet(os.path.join(out, table)).count()
+        assert newest.rows.sum() == held, stage
+
 
 def test_compact_recovers_doc_table_swap_crash(spark, docs_df,
                                                tmp_path_factory):

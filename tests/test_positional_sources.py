@@ -1,4 +1,4 @@
-"""Positional window ops, TREC/graph sources, multimodal plumbing."""
+"""Positional window ops, TREC/graph sources."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from sequential_query_expansion_spark.functions import positional as pos
-from sequential_query_expansion_spark.operators import multimodal as mm
 from sequential_query_expansion_spark.sources import graph as gsrc
 from sequential_query_expansion_spark.sources import trec
 
@@ -153,112 +152,7 @@ def test_indri_cfg_writer(spark, tmp_path):
     assert "<count>10</count>" in txt and "<trecFormat>true</trecFormat>" in txt
 
 
-def test_table_io_parquet_fallback(spark, tmp_path):
-    from sequential_query_expansion_spark.sources import tables
-
-    df = spark.createDataFrame(
-        [(1, "a", 0), (2, "b", 1), (3, "c", 0)], "id long, v string, bucket int"
-    )
-    path = str(tmp_path / "t")
-    tables.write_table(df, path, partition_by=["bucket"])
-    back = tables.read_table(spark, path)
-    assert back.count() == 3
-    assert {r["v"] for r in back.collect()} == {"a", "b", "c"}
-    tables.write_table(df.limit(1), path, mode="append", partition_by=["bucket"])
-    assert tables.read_table(spark, path).count() == 4
-    assert not tables.iceberg_available(spark)  # no catalog in sandbox
-
-
 def test_semantic_types_table(spark):
     df = gsrc.semantic_types_df(spark)
     rows = {r["tui"] for r in df.collect()}
     assert rows == set(gsrc.GOOD_TUIS) and len(rows) == 6
-
-
-# --------------------------------------------------------------- multimodal
-# The image/audio codecs are REAL (PNG/WAV, functions/media.py); pixel/
-# sample-exact codec tests live in tests/test_media.py — here we drive
-# the Spark operators end-to-end over synthesized real payloads.
-
-@pytest.fixture(scope="module")
-def doc_ids(spark):
-    return spark.createDataFrame(
-        [(i,) for i in range(20)], "doc_id long"
-    ).persist()
-
-
-@pytest.fixture(scope="module")
-def images(doc_ids):
-    return mm.synthesize_image_table(doc_ids).persist()
-
-
-def test_image_features_real_pixels(images, doc_ids):
-    import numpy as np
-    from sequential_query_expansion_spark.functions import media
-    from sequential_query_expansion_spark.operators.multimodal import (
-        _image_feat, _synth_image,
-    )
-
-    a = mm.image_features(images).orderBy("doc_id").collect()
-    assert len(a) == 20
-    assert all(len(r["feat"]) == mm.IMAGE_FEAT_DIM for r in a)
-    assert all(r["width"] == 32 and r["height"] == 24 for r in a)
-    # operator output == direct decode+feature of the same payload
-    want = _image_feat(media.png_decode(_synth_image(3)))
-    got = np.array(next(r["feat"] for r in a if r["doc_id"] == 3))
-    assert np.allclose(got, want, atol=1e-6)
-
-
-def test_image_resize_roundtrips_real_thumb(images):
-    from sequential_query_expansion_spark.functions import media
-
-    out = mm.image_resize(images, 8, 6).collect()
-    for r in out:
-        thumb = media.png_decode(bytes(r["thumb"]))
-        assert thumb.shape == (6, 8, 3)
-
-
-def test_audio_duration_exact_and_mfcc_shape(doc_ids):
-    au = mm.audio_features(mm.synthesize_audio_table(doc_ids)).collect()
-    by_id = {r["doc_id"]: r for r in au}
-    assert all(len(r["mfcc"]) == 13 for r in au)
-    # synthesized duration is 0.5 + (doc_id % 8) * 0.25 s, decoded exactly
-    for i in (0, 3, 7):
-        assert abs(by_id[i]["duration_s"] - (0.5 + (i % 8) * 0.25)) < 1e-6
-
-
-def test_video_sampler_seeks_and_respects_fps(doc_ids):
-    vids = mm.synthesize_video_table(doc_ids)
-    pdf = mm.video_frame_sample(vids, every_s=0.5, max_frames=4).toPandas()
-    # synthesized videos have 3..6 frames at 4 fps; every_s=0.5 -> frame
-    # stride 2, so sampled idx ∈ {0, 2, 4}
-    assert set(pdf.frame_idx) <= {0, 2, 4}
-    assert (pdf.ts_s == pdf.frame_idx / 4.0).all()
-    assert all(len(x) == 4 for x in pdf.frame_feat)
-
-
-def test_image_features_rejects_non_png(spark):
-    bad = spark.createDataFrame(
-        [(1, bytearray(b"not a png"))], "doc_id long, payload binary"
-    )
-    with pytest.raises(Exception, match="PNG|PythonException"):
-        mm.image_features(bad).collect()
-
-
-def test_null_payloads_are_skipped_not_crashed(spark, doc_ids):
-    from sequential_query_expansion_spark.operators.multimodal import (
-        _synth_image,
-    )
-
-    mixed = spark.createDataFrame(
-        [(1, bytearray(_synth_image(1))), (2, None)],
-        "doc_id long, payload binary",
-    )
-    out = mm.image_features(mixed).collect()
-    assert [r["doc_id"] for r in out] == [1]
-    assert mm.image_resize(mixed, 4, 4).count() == 1
-
-
-def test_video_sampler_rejects_nonpositive_step(doc_ids):
-    with pytest.raises(ValueError, match="every_s"):
-        mm.video_frame_sample(mm.synthesize_video_table(doc_ids), every_s=0.0)
