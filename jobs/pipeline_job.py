@@ -97,6 +97,7 @@ def main() -> int:
         text_analysis,
         training_prep,
     )
+    from sequential_query_expansion_spark.util import Caches
 
     docs = read_input(spark, args.input)
     idc, txc = args.id_col, args.text_col
@@ -135,15 +136,14 @@ def main() -> int:
         )
         d = d.join(flagged, idc, "left_anti")
 
-    # persisted: pack_sequences and the final join both read samp —
-    # without the cache the full upstream chain executes twice. The job
-    # owns every cache it and pack_sequences make, and releases them
-    # once the output is written.
-    samp = training_prep.mixture_sample(
-        d, rates, default_rate=args.default_rate, id_col=idc, salt=args.salt,
-    ).persist()
-    caches = [samp]
-    try:
+    # samp is cached: pack_sequences and the final join both read it, and
+    # uncached the upstream chain runs twice. The owner releases it and
+    # pack_sequences' cache once the output is written.
+    with Caches() as caches:
+        samp = caches.persist(training_prep.mixture_sample(
+            d, rates, default_rate=args.default_rate, id_col=idc,
+            salt=args.salt,
+        ))
         packed = training_prep.pack_sequences(
             samp.select(idc, "n_tokens"), capacity=args.capacity, id_col=idc,
             caches=caches,
@@ -155,9 +155,6 @@ def main() -> int:
             "start_tok", "bin_id", "overflow", "text",
         )
         out.write.mode("overwrite").parquet(args.output)
-    finally:
-        for df in caches:
-            df.unpersist()
 
     # summary reads the (small) OUTPUT only — no extra pass over the
     # input table just for a log line

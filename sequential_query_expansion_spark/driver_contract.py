@@ -28,7 +28,7 @@ from .functions.text import TOKENIZE_SQL_DUCKDB, tokenize_col
 from .index.build import K1, B
 from .operators import dedup, similarity, text_analysis
 from .scoring.bm25 import query_term_table, score_topk
-from .util import local_frame
+from .util import Caches, local_frame
 from .webtext import (
     WEB_QUERIES,
     cooccur_edges,
@@ -920,21 +920,17 @@ def q_feature_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = doc_index(spark, sf_dir)
     qt = query_term_table(queries_df(spark))
     edges = cooccur_edges(spark, sf_dir, min_df_both=FEAT_EDGE_MIN)
-    caches: list = []
     feats = concept_features(
         idx, qt, edges, top_t=FEAT_TOP_T, rank_round=RANK_ROUND,
-        caches=caches,
     )
     weighted = normalize_and_combine(feats)
     sel = select_expansion_terms(
         weighted, n_terms=FEAT_N_TERMS, rank_round=RANK_ROUND
     )
-    # materialize (≤ queries × FEAT_N_TERMS rows), release the pass's
-    # caches, and rank client-side on the same (rounded weight desc,
-    # cand asc) key the selection used — no second window pass
+    # materialize (≤ queries × FEAT_N_TERMS rows) and rank client-side
+    # on the same (rounded weight desc, cand asc) key the selection
+    # used — no second window pass
     rows = sel.select("qid", "cand", "weight").collect()
-    for df in caches:
-        df.unpersist()
     rows.sort(key=lambda r: (r["qid"], -round(r["weight"], RANK_ROUND), r["cand"]))
     out, rank, prev_qid = [], 0, None
     for r in rows:
@@ -1405,7 +1401,9 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_documents(spark, sf_dir).select(
         "doc_id", F.size(toks).cast("long").alias("n_tokens")
     )
-    return training_prep.pack_sequences(d, capacity=PACK_CAP)
+    with Caches() as caches:
+        out = training_prep.pack_sequences(d, capacity=PACK_CAP, caches=caches)
+        return local_frame(spark, out.collect(), out.schema.simpleString())
 
 
 REP_MIN_TOKENS = 24            # training-set gate: minimum tokens
@@ -1482,29 +1480,30 @@ def q_training_set_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     d5 = d4.join(flagged, "doc_id", "left_anti")
-    # 6. mixture sampling by source (source rejoined from the corpus).
-    # localCheckpoint: both pack_sequences (via its own cache) and
-    # the final join consume samp — without the cut the whole 6-stage
-    # lineage executes twice (measured 10.2 s -> ~6 s at sf0.1)
-    samp = training_prep.mixture_sample(
-        d5.join(docs.select("doc_id", "source"), "doc_id"),
-        MIX_RATES, default_rate=MIX_DEFAULT, salt=MIX_SALT,
-    ).localCheckpoint()
-    # 7. sequence packing over the sampled survivors
-    packed = training_prep.pack_sequences(
-        samp.select("doc_id", "n_tokens"), capacity=PACK_CAP
-    )
-    return packed.join(
-        samp.select(
-            "doc_id", "source",
-            F.round("sample_weight", 6).alias("sample_weight"),
-            F.md5(F.col("text2").cast("binary")).alias("text_fp"),
-        ),
-        "doc_id",
-    ).select(
-        "doc_id", "source", "n_tokens", "sample_weight",
-        "start_tok", "bin_id", "overflow", "text_fp",
-    )
+    with Caches() as caches:
+        # 6. mixture sampling by source (source rejoined from the
+        # corpus), cached: pack_sequences and the final join both read
+        # samp — uncached, the whole 6-stage lineage executes twice
+        samp = caches.persist(training_prep.mixture_sample(
+            d5.join(docs.select("doc_id", "source"), "doc_id"),
+            MIX_RATES, default_rate=MIX_DEFAULT, salt=MIX_SALT,
+        ))
+        # 7. sequence packing over the sampled survivors
+        packed = training_prep.pack_sequences(
+            samp.select("doc_id", "n_tokens"), capacity=PACK_CAP, caches=caches
+        )
+        out = packed.join(
+            samp.select(
+                "doc_id", "source",
+                F.round("sample_weight", 6).alias("sample_weight"),
+                F.md5(F.col("text2").cast("binary")).alias("text_fp"),
+            ),
+            "doc_id",
+        ).select(
+            "doc_id", "source", "n_tokens", "sample_weight",
+            "start_tok", "bin_id", "overflow", "text_fp",
+        )
+        return local_frame(spark, out.collect(), out.schema.simpleString())
 
 
 LINE_W = 6                     # tokens per synthetic line for line_dedup

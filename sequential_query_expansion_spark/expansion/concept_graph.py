@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..index.build import IndexTables
 from ..scoring.bm25 import score_topk
-from ..util import local_frame
+from ..util import Caches, local_frame
 
 FEATURES: List[str] = [
     "expTDocScore", "topTermFrac", "numCanDocs", "avgCDocScore",
@@ -104,16 +104,12 @@ def concept_features(
     top_t: int = 10,
     count_lim: int = 0,
     rank_round: int | None = None,
-    caches: list | None = None,
 ) -> DataFrame:
-    """-> (qid, cand, <14 feature columns>) per weightRelConcept.
+    """-> (qid, cand, <14 feature columns>) per weightRelConcept, as a
+    LocalRelation.
 
     ``rank_round`` selects the top-T feedback docs on round(score, d)
     (the cross-engine float policy) instead of the exact score.
-    ``caches``: if given, the DataFrames this pass persists are appended
-    so the caller can unpersist them once the output is materialized —
-    the layered loop would otherwise accumulate per-layer cached
-    partitions across iterations (executor memory at scale).
 
     One serial chain of four collects on the caller's thread, so every
     job keeps the caller's job group: candidate edges, the feedback
@@ -126,7 +122,8 @@ def concept_features(
     (:767-891). Both postings consumers share ONE term-pruned scan
     (`pf_sub`) — at web scale that filter is the bucket/partition
     prune, and it is the only big-table read here besides the feedback
-    BM25 pass."""
+    BM25 pass. `pf_sub` is cached for the two collects and released
+    before returning."""
     n_docs = float(index.n_docs)
     spark = query_terms.sparkSession
 
@@ -151,19 +148,54 @@ def concept_features(
         .collect()
     )
 
-    pf_sub = (
-        index.postings_flat.filter(F.col("term").isin(term_set))
-        .select("term", "doc_id", "tf")
-        .persist()
-    )
-    if caches is not None:
-        caches.append(pf_sub)
+    with Caches() as caches:
+        pf_sub = caches.persist(
+            index.postings_flat.filter(F.col("term").isin(term_set))
+            .select("term", "doc_id", "tf")
+        )
 
-    # --- feedback docs' vectors: ≤ |feedback docs| × |term set| rows ----
-    vecs: Dict[int, Dict[str, int]] = {}
-    fb_ids = sorted({r["doc_id"] for r in topdoc_rows})
-    for r in pf_sub.filter(F.col("doc_id").isin(fb_ids)).collect():
-        vecs.setdefault(r["doc_id"], {})[r["term"]] = r["tf"]
+        # --- feedback docs' vectors: ≤ |feedback docs| × |term set| rows
+        vecs: Dict[int, Dict[str, int]] = {}
+        fb_ids = sorted({r["doc_id"] for r in topdoc_rows})
+        for r in pf_sub.filter(F.col("doc_id").isin(fb_ids)).collect():
+            vecs.setdefault(r["doc_id"], {})[r["term"]] = r["tf"]
+
+        # --- collection counts: pair co-occurrence ∪ per-term df --------
+        # a term's df is keyed as the pair (t, t): candidate_edges drops
+        # the query's own terms, so no real pair has orig == cand.
+        # Per-term df over pf_sub == vocab.df (one postings row per
+        # (term, doc)).
+        p = local_frame(
+            spark,
+            sorted({(r["orig"], r["cand"]) for r in cand_rows}),
+            "orig string, cand string",
+        )
+        counts = (
+            pf_sub.select(F.col("term").alias("orig"), "doc_id")
+            .join(F.broadcast(p), "orig")
+            .join(
+                pf_sub.select(F.col("term").alias("cand"), "doc_id"),
+                ["cand", "doc_id"],
+            )
+            .groupBy("orig", "cand")
+            .agg(F.count("*").alias("n"))
+            .unionByName(
+                pf_sub.groupBy("term")
+                .agg(F.count("*").alias("n"))
+                .select(
+                    F.col("term").alias("orig"), F.col("term").alias("cand"),
+                    "n",
+                )
+            )
+        )
+        tdf: Dict[str, int] = {}
+        db: Dict[tuple, int] = {}
+        for r in counts.collect():
+            if r["orig"] == r["cand"]:
+                tdf[r["orig"]] = r["n"]
+            else:
+                db[(r["orig"], r["cand"])] = r["n"]
+
     # qid -> [(score, {term: tf})] over its top-T docs, in doc_id order
     fb: Dict[str, list] = {}
     top_dl_sum: Dict[str, int] = {}
@@ -172,40 +204,6 @@ def concept_features(
             (r["score"], vecs.get(r["doc_id"], {}))
         )
         top_dl_sum[r["qid"]] = top_dl_sum.get(r["qid"], 0) + r["dl"]
-
-    # --- collection counts: pair co-occurrence ∪ per-term df ------------
-    # a term's df is keyed as the pair (t, t): candidate_edges drops the
-    # query's own terms, so no real pair has orig == cand. Per-term df
-    # over pf_sub == vocab.df (one postings row per (term, doc)).
-    p = local_frame(
-        spark,
-        sorted({(r["orig"], r["cand"]) for r in cand_rows}),
-        "orig string, cand string",
-    )
-    counts = (
-        pf_sub.select(F.col("term").alias("orig"), "doc_id")
-        .join(F.broadcast(p), "orig")
-        .join(
-            pf_sub.select(F.col("term").alias("cand"), "doc_id"),
-            ["cand", "doc_id"],
-        )
-        .groupBy("orig", "cand")
-        .agg(F.count("*").alias("n"))
-        .unionByName(
-            pf_sub.groupBy("term")
-            .agg(F.count("*").alias("n"))
-            .select(
-                F.col("term").alias("orig"), F.col("term").alias("cand"), "n"
-            )
-        )
-    )
-    tdf: Dict[str, int] = {}
-    db: Dict[tuple, int] = {}
-    for r in counts.collect():
-        if r["orig"] == r["cand"]:
-            tdf[r["orig"]] = r["n"]
-        else:
-            db[(r["orig"], r["cand"])] = r["n"]
 
     # per-(qid, orig, cand) co-occurrence correlations, then avg/max per
     # (qid, cand) — orig terms absent from the vocabulary drop out of
@@ -340,20 +338,15 @@ def sequential_expand(
         sources = local_frame(
             spark, src_rows, "qid string, term string, weight double"
         )
-        layer_caches: list = []
         feats = concept_features(
             index, sources, graph_edges, top_t=top_t, count_lim=count_lim,
-            rank_round=rank_round, caches=layer_caches,
+            rank_round=rank_round,
         )
         weighted = normalize_and_combine(feats, feature_weights)
         sel = select_expansion_terms(
             weighted, n_terms=per_layer_terms[ell - 1], rank_round=rank_round
         )
         sel_rows = sel.select("qid", "cand", "weight").collect()
-        # the selection is materialized — release this layer's caches so
-        # iterations don't accumulate persisted partitions
-        for df in layer_caches:
-            df.unpersist()
         # exclude anything already selected in ANY earlier layer (the
         # reference drops, not replaces: exclusion runs AFTER the top-N)
         lw = float(layer_weights[ell - 1])

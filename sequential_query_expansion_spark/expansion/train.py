@@ -18,8 +18,7 @@ iterative optimizer into a single plan.
 from __future__ import annotations
 
 import random
-from contextlib import contextmanager
-from typing import Dict, Iterator, Tuple
+from typing import Dict, Tuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -27,25 +26,12 @@ from pyspark.sql import functions as F
 from ..evalmetrics import evaluate
 from ..index.build import IndexTables
 from ..scoring.bm25 import score_topk
+from ..util import Caches
 from .concept_graph import (
     FEATURES,
     normalize_and_combine,
     select_expansion_terms,
 )
-
-
-@contextmanager
-def _cached(features: DataFrame) -> Iterator[DataFrame]:
-    """``features`` persisted for the search's many evaluations, and
-    released after it unless the caller had persisted it already."""
-    if features.is_cached:
-        yield features
-        return
-    features = features.persist()
-    try:
-        yield features
-    finally:
-        features.unpersist()
 
 
 def _map_for_weights(
@@ -101,7 +87,8 @@ def coordinate_ascent(
 ) -> Tuple[Dict[str, float], float, list]:
     """-> (best_weights, best_map, history). history = list of
     (feature, tried_value, map) like coordinateAscent/steps.txt."""
-    with _cached(features) as features:
+    with Caches() as caches:
+        features = caches.persist(features)
         weights = dict(init or {f: 1.0 for f in FEATURES})
         best = _map_for_weights(index, features, query_terms, qrels,
                                 weights, **eval_kw)
@@ -137,7 +124,8 @@ def random_search(
     hi: float = 2.0,
     **eval_kw,
 ) -> Tuple[Dict[str, float], float, list]:
-    with _cached(features) as features:
+    with Caches() as caches:
+        features = caches.persist(features)
         rng = random.Random(seed)
         best_w = {f: 1.0 for f in FEATURES}
         best = _map_for_weights(index, features, query_terms, qrels, best_w,

@@ -35,16 +35,16 @@ Scale notes (the 100 TB design):
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import explode_term_frequencies, stem_tokens, tokenize_col
-from ..util import local_frame
+from ..util import Caches, ensure_parallelism, range_prefix_sum
 from .codec import encode_block
 from .xxh64 import term_bucket_col
 
@@ -70,41 +70,24 @@ class IndexTables:
     # as a checkpoint stage; None until built (Indri stores positions in
     # its inverted file, occuranceCount.cpp:310-351)
     positional: DataFrame | None = None
+    # owner of the tables the build persisted
+    caches: Caches = field(default_factory=Caches, repr=False)
 
     def idf_col(self, df_col):
         return F.log(F.lit(1.0) + (F.lit(self.n_docs) - df_col + 0.5) / (df_col + 0.5))
 
+    def release(self) -> None:
+        """Unpersist every table the build persisted."""
+        self.caches.release()
 
-def assign_doc_ids(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """docmap(doc_id, url): doc_id == rank of url in global sort order.
 
-    Scalable global ranking: range-partition by url, sort within
-    partitions, count rows per partition (tiny driver collect of P longs),
-    cumulative offsets broadcast back, per-partition row_number. No global
-    single-partition window anywhere.
-    """
-    spark = pages.sparkSession
-    num_partitions = num_partitions or pages.rdd.getNumPartitions()
-    urls = pages.select("url").repartitionByRange(num_partitions, "url")
-    # persist so the count job and the window job see the SAME range
-    # boundaries (range partitioning samples its input)
-    part = urls.withColumn("pid", F.spark_partition_id()).persist()
-    counts = part.groupBy("pid").count().orderBy("pid").collect()
-    offsets = {}
-    acc = 0
-    for row in counts:
-        offsets[row["pid"]] = acc
-        acc += row["count"]
-    off_df = local_frame(
-        spark,
-        [(int(p), int(o)) for p, o in offsets.items()], "pid int, offset long"
-    )
-    w = F.row_number().over(Window.partitionBy("pid").orderBy("url"))
-    return (
-        part.withColumn("rn", w)
-        .join(F.broadcast(off_df), "pid")
-        .select((F.col("offset") + F.col("rn") - 1).alias("doc_id"), "url")
-    )
+def assign_doc_ids(pages: DataFrame, caches: Caches) -> DataFrame:
+    """docmap(doc_id, url): doc_id == rank of url in global sort order
+    (:func:`util.range_prefix_sum`). ``caches`` owns the partitioned
+    urls, which must stay cached until the docmap is materialized."""
+    return range_prefix_sum(
+        caches, pages.select("url"), "url", None, "doc_id"
+    ).select("doc_id", "url")
 
 
 def build_index(
@@ -117,12 +100,10 @@ def build_index(
     """pages(url, warc_ts, html, text, lang) -> IndexTables: the global
     url ranking of :func:`assign_doc_ids`, then :func:`build_index_from_docs`
     over (doc_id, text), keeping the url-bearing docmap."""
-    docmap = assign_doc_ids(pages).persist()
+    caches = Caches()
+    docmap = caches.persist(assign_doc_ids(pages, caches))
     docs = pages.select("url", "text").join(docmap, "url").select("doc_id", "text")
-    idx = build_index_from_docs(
-        docs, stem=stem, build_blocked=build_blocked,
-        salt_ranges=salt_ranges, codec=codec,
-    )
+    idx = _build(docs, caches, stem, build_blocked, salt_ranges, codec)
     idx.docmap = docmap
     return idx
 
@@ -140,25 +121,38 @@ def build_index_from_docs(
     ``documents`` testdata table); skips the global url-ranking exchange
     entirely — one less shuffle than :func:`build_index`.
     """
-    from ..util import ensure_parallelism
+    return _build(docs, Caches(), stem, build_blocked, salt_ranges, codec)
 
+
+def _build(docs: DataFrame, caches: Caches, stem: bool, build_blocked: bool,
+           salt_ranges: int, codec: str) -> IndexTables:
+    """The build over docs(doc_id, text); the returned IndexTables owns
+    ``caches``. NULL text is built as empty text: a zero-length doc."""
     docs = ensure_parallelism(docs)
     docmap = docs.select("doc_id", F.col("doc_id").cast("string").alias("url"))
 
-    doc_terms = docs.select("doc_id", tokenize_col(F.col("text")).alias("tokens"))
+    # not coalesce: a literal fallback makes tokens and dl non-nullable,
+    # which changes the parquet layout the checkpoint writes
+    text = F.when(F.col("text").isNull(), "").otherwise(F.col("text"))
+    doc_terms = docs.select("doc_id", tokenize_col(text).alias("tokens"))
     if stem:
         doc_terms = doc_terms.select("doc_id", stem_tokens("tokens").alias("tokens"))
-    doc_terms = doc_terms.persist()
+    doc_terms = caches.persist(doc_terms)
 
     doc_len = doc_terms.select("doc_id", F.size("tokens").alias("dl"))
 
-    postings_flat = explode_term_frequencies(doc_terms).persist()
+    postings_flat = caches.persist(explode_term_frequencies(doc_terms))
 
     vocab = postings_flat.groupBy("term").agg(
         F.count("*").alias("df"), F.sum("tf").alias("cf")
     )
 
     gstats = doc_len.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).collect()[0]
+    if not gstats["n"]:
+        caches.release()
+        raise ValueError(
+            "cannot build an index: the input table has no documents"
+        )
     n_docs, avgdl = int(gstats["n"]), float(gstats["avgdl"])
 
     blocked = None
@@ -171,11 +165,12 @@ def build_index_from_docs(
         docmap=docmap,
         doc_terms=doc_terms,
         doc_len=doc_len,
-        vocab=vocab.persist(),
+        vocab=caches.persist(vocab),
         postings_flat=postings_flat,
         postings=blocked,
         n_docs=n_docs,
         avgdl=avgdl,
+        caches=caches,
     )
 
 

@@ -161,8 +161,7 @@ def build_index_checkpointed(
         _write_table(idx.doc_len, os.path.join(out_dir, "doc_len"))
         idx.vocab.write.mode("overwrite").parquet(os.path.join(out_dir, "vocab"))
         # every later stage reads the checkpoint, not these caches
-        for cached in (idx.doc_terms, idx.postings_flat, idx.vocab):
-            cached.unpersist()
+        idx.release()
         with open(os.path.join(out_dir, "stats.json"), "w") as f:
             json.dump(
                 {

@@ -18,9 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..util import local_frame
+from ..util import Caches, range_prefix_sum
 
 HASH_MOD = 16 ** 6  # first 6 md5 hex chars -> uniform int in [0, 2^24)
 
@@ -75,7 +74,8 @@ def pack_sequences(
     capacity: int,
     id_col: str = "doc_id",
     tokens_col: str = "n_tokens",
-    caches: list | None = None,
+    *,
+    caches: Caches,
 ) -> DataFrame:
     """Assign documents (in ``id_col`` order) to fixed-capacity token
     bins: a document belongs to the bin where its global token offset
@@ -86,68 +86,23 @@ def pack_sequences(
     greedy first-fit — greedy's reset makes every bin depend on all
     prior bins, which cannot scale past one partition).
 
-    100 TB shape: a TRUE distributed prefix sum, not a global window
-    (``Window.orderBy`` with no partition key collapses the corpus into
-    one task): range-repartition by id, aggregate one token-sum row per
-    partition (a P-row collect), broadcast the exclusive partition
-    offsets back, and window only WITHIN partitions. The output is
-    invariant to the (sampled, run-varying) range boundaries because
-    offset + local cumsum telescopes to the global cumsum.
-
-    Refuses rows whose ``tokens_col`` is NULL: they would get a NULL
-    start offset, and a partition of only NULLs has no token sum.
-    ``caches``: if given, the range-partitioned input this pass
-    persists is appended so the caller can unpersist it once the
-    output is written.
+    100 TB shape: the token offsets are a distributed prefix sum
+    (:func:`util.range_prefix_sum`), not a global window. Refuses rows
+    whose ``tokens_col`` is NULL. ``caches`` owns the range-partitioned
+    input that prefix sum persists; release it once the output is read.
     """
     if capacity < 1:
         raise ValueError(f"capacity must be >= 1, got {capacity}")
-    # persisted, so the sums below and the windows after them see the
-    # SAME range boundaries (range partitioning samples its input)
-    d = docs.select(id_col, tokens_col).repartitionByRange(F.col(id_col))
-    d = d.withColumn("_pid", F.spark_partition_id()).persist()
-    stats = d.groupBy("_pid").agg(
-        F.sum(tokens_col).alias("s"),
-        F.sum(F.col(tokens_col).isNull().cast("long")).alias("n_null"),
-    ).collect()
-    n_null = sum(r["n_null"] for r in stats)
-    if n_null:
-        d.unpersist()
-        raise ValueError(
-            f"{n_null} row(s) have a NULL {tokens_col!r}; packing needs a "
-            "token count for every document"
-        )
-    if caches is not None:
-        caches.append(d)
-    psums = {r["_pid"]: r["s"] for r in stats}
-    offsets, acc = [], 0
-    for pid in sorted(psums):  # range partitions ascend with pid
-        offsets.append((pid, acc))
-        acc += int(psums[pid])
-    off = F.broadcast(
-        local_frame(docs.sparkSession, offsets, "_pid int, _off long")
+    d = range_prefix_sum(
+        caches, docs.select(id_col, tokens_col), id_col, tokens_col,
+        "start_tok",
     )
-    # explicit ROWS frame: the default RANGE frame would sum PEER rows
-    # (duplicate ids) into both peers' cumsums, diverging from the
-    # oracle's ROWS UNBOUNDED PRECEDING
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    start = (
-        F.col("_off")
-        + F.sum(tokens_col).over(w)
-        - F.col(tokens_col)
-    )
+    start = F.col("start_tok")
     cap = F.lit(int(capacity))
-    return (
-        d.join(off, "_pid")
-        .select(
-            id_col,
-            F.col(tokens_col).cast("long").alias(tokens_col),
-            start.cast("long").alias("start_tok"),
-            F.floor(start / cap).cast("long").alias("bin_id"),
-            ((start % cap) + F.col(tokens_col) > cap).alias("overflow"),
-        )
+    return d.select(
+        id_col,
+        F.col(tokens_col).cast("long").alias(tokens_col),
+        start,
+        F.floor(start / cap).cast("long").alias("bin_id"),
+        ((start % cap) + F.col(tokens_col) > cap).alias("overflow"),
     )

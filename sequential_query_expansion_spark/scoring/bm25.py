@@ -21,6 +21,8 @@ Physical shape (the part that must survive 100 TB):
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,16 +112,8 @@ def score_topk_working_set(
     """Working-set restriction (reference `<workingSetDocno>`,
     optParams/wsdm12-improved-NThrsh-coordAsc.ipynb:490-495): score only
     docs in ``working_set(doc_id)`` — a semi-join pushed below scoring."""
-    restricted_index = IndexTables(
-        docmap=index.docmap,
-        doc_terms=index.doc_terms,
-        doc_len=index.doc_len,
-        vocab=index.vocab,
-        postings_flat=index.postings_flat.join(
-            F.broadcast(working_set.select("doc_id")), "doc_id", "left_semi"
-        ),
-        postings=index.postings,
-        n_docs=index.n_docs,
-        avgdl=index.avgdl,
-    )
+    # a view of ``index``: same stats, same owner of the build's caches
+    restricted_index = replace(index, postings_flat=index.postings_flat.join(
+        F.broadcast(working_set.select("doc_id")), "doc_id", "left_semi"
+    ))
     return score_topk(restricted_index, query_terms, k=k, **kw)

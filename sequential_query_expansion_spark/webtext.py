@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .index.build import IndexTables, build_index_from_docs
-from .util import ensure_parallelism, local_frame
+from .util import Caches, ensure_parallelism, local_frame
 
 # qid -> query text (frozen; contract entries and their oracles share them).
 WEB_QUERIES: Dict[str, str] = {
@@ -73,7 +73,9 @@ def query_term_rows(weights_scale: float = 1.0) -> List[tuple]:
 # Every index accessor below is memoized with functools.cache, keyed by
 # (spark, sf_dir[, min_df_both]): SparkSession keeps object identity for
 # equality, and holding the session in the key means a later session can
-# never be handed this one's cached tables.
+# never be handed this one's cached tables. They live as long as the
+# session, so one module-level owner holds them.
+_MEMO = Caches()
 
 
 @functools.cache
@@ -93,9 +95,9 @@ def doc_index(spark: SparkSession, sf_dir: str, blocked: bool = False) -> IndexT
     if blocked and idx.postings is None:
         from .index.build import build_blocked_postings
 
-        idx.postings = build_blocked_postings(
+        idx.postings = idx.caches.persist(build_blocked_postings(
             idx.postings_flat, idx.n_docs, idx.avgdl, salt_ranges=8
-        ).persist()
+        ))
     return idx
 
 
@@ -161,7 +163,7 @@ def incremental_index(spark: SparkSession, sf_dir: str):
     start_incremental_build(
         spark, in_dir + "/*", out_dir).awaitTermination()
     idx = compact_segments(spark, out_dir, build_blocked=False)
-    idx.postings_flat.persist().count()
+    _MEMO.persist(idx.postings_flat).count()
     return idx
 
 
@@ -172,7 +174,9 @@ def positional_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract entries so they reuse one build."""
     from .index.positions import build_positional_postings
 
-    return build_positional_postings(doc_index(spark, sf_dir).doc_terms).persist()
+    return _MEMO.persist(
+        build_positional_postings(doc_index(spark, sf_dir).doc_terms)
+    )
 
 
 @functools.cache
@@ -213,12 +217,10 @@ def cooccur_edges(
         [(t,) for t in sorted({t for _, t, _ in query_term_rows()})],
         "term string",
     )
-    e1 = pairs(seeds).persist()
+    e1 = _MEMO.persist(pairs(seeds))
     frontier = e1.select(F.col("dst").alias("term")).distinct()
-    return (
-        e1.unionByName(pairs(frontier))
-        .dropDuplicates(["src", "dst"])
-        .persist()
+    return _MEMO.persist(
+        e1.unionByName(pairs(frontier)).dropDuplicates(["src", "dst"])
     )
 
 
@@ -245,7 +247,7 @@ def pseudo_qrels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("qid", "doc_id")
         .agg(F.count("*").alias("n_hit"), F.min("tf").alias("min_tf"))
     )
-    return (
+    return _MEMO.persist(
         hits.join(n_terms, "qid")
         .filter(F.col("n_hit") == F.col("n_terms"))
         .select(
@@ -253,5 +255,4 @@ def pseudo_qrels(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.when(F.col("min_tf") >= 2, F.lit(2)).otherwise(F.lit(1)).alias("rel"),
         )
-        .persist()
     )

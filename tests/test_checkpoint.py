@@ -102,9 +102,25 @@ def test_loaded_index_queries(spark, built_index, tiny_corpus):
 
 
 @pytest.mark.parametrize(
-    "case", ["build_index_checkpointed", "two_stage_topk", "phrase_weighted_topk"]
+    "case",
+    [
+        "build_index_checkpointed", "two_stage_topk", "phrase_weighted_topk",
+        "build_index", "minhash_lsh_dedup", "pack_sequences",
+        "concept_features", "sequential_expand", "coordinate_ascent",
+    ],
 )
-def test_leaves_no_persisted_rdds(spark, built_index, tiny_corpus, case):
+def test_leaves_no_persisted_rdds(spark, built_index, docs_df, tiny_corpus,
+                                  case):
+    """Every cache has one owner that releases it: after each public
+    function that caches runs to a collect (and its owner, where it
+    takes one, is released), no persisted RDD is left."""
+    from sequential_query_expansion_spark.expansion import concept_graph as cg
+    from sequential_query_expansion_spark.expansion import train
+    from sequential_query_expansion_spark.functions.text import tokenize_col
+    from sequential_query_expansion_spark.index.build import build_index
+    from sequential_query_expansion_spark.operators import (
+        dedup, training_prep,
+    )
     from sequential_query_expansion_spark.scoring.bm25 import query_term_table
     from sequential_query_expansion_spark.scoring.lm import two_stage_topk
     from sequential_query_expansion_spark.scoring.phrase import (
@@ -116,12 +132,46 @@ def test_leaves_no_persisted_rdds(spark, built_index, tiny_corpus, case):
         assert build_leaked == 0
         return
     before = _persisted_rdds(spark)
+    qt = query_term_table(spark.createDataFrame(tiny_corpus.queries))
+    graph = spark.createDataFrame(tiny_corpus.graph_edges)
     if case == "two_stage_topk":
-        qt = query_term_table(spark.createDataFrame(tiny_corpus.queries))
         assert two_stage_topk(idx, qt, k=5).count() > 0
-    else:
+    elif case == "phrase_weighted_topk":
         # goes through phrase_weighted_topk with #od/#uw phrase clauses
         concepts = {"c1": "term00000 term00001", "c2": "term00002 term00000"}
         res = concept_query_topk(spark, idx, idx.positional, concepts, k=5)
         assert res.count() > 0
+    elif case == "build_index":
+        built = build_index(spark.createDataFrame(tiny_corpus.pages))
+        assert built.docmap.join(built.postings_flat, "doc_id").count() > 0
+        assert built.vocab.count() > 0
+        built.release()
+    elif case == "minhash_lsh_dedup":
+        dedup.minhash_lsh_dedup(docs_df, threshold=0.5).collect()
+    elif case == "pack_sequences":
+        from sequential_query_expansion_spark.util import Caches
+
+        toks = docs_df.select(
+            "doc_id", F.size(tokenize_col(F.col("text"))).alias("n_tokens")
+        )
+        with Caches() as caches:
+            packed = training_prep.pack_sequences(toks, 64, caches=caches)
+            assert len(packed.collect()) == docs_df.count()
+    elif case == "concept_features":
+        assert cg.concept_features(idx, qt, graph, top_t=5).count() > 0
+    elif case == "sequential_expand":
+        assert cg.sequential_expand(idx, qt, graph, top_t=5).count() > 0
+    else:
+        # docs_df ids are the url sort order of the pages
+        pages = tiny_corpus.pages.sort_values("url").reset_index(drop=True)
+        url_to_doc = dict(zip(pages.url, pages.index))
+        qrels = spark.createDataFrame(
+            tiny_corpus.qrels.assign(doc_id=lambda d: d.url.map(url_to_doc))
+            [["qid", "doc_id", "rel"]]
+        )
+        feats = cg.concept_features(idx, qt, graph, top_t=5)
+        _, best, _ = train.coordinate_ascent(
+            idx, feats, qt, qrels, max_rounds=0, n_terms=5, k=50
+        )
+        assert best > 0
     assert _persisted_rdds(spark) == before

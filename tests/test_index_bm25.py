@@ -7,6 +7,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sequential_query_expansion_spark.index.build import (
+    build_index,
+    build_index_from_docs,
+)
 from sequential_query_expansion_spark.oracle import bm25_topk
 from sequential_query_expansion_spark.scoring.bm25 import (
     query_term_table,
@@ -57,6 +61,36 @@ def test_index_invariants(index_tables):
 def test_avgdl_and_ndocs(index_tables, oracle_index):
     assert index_tables.n_docs == oracle_index.n_docs
     assert index_tables.avgdl == pytest.approx(oracle_index.avgdl, abs=1e-9)
+
+
+def test_null_text_is_a_zero_length_doc(spark):
+    # n_docs counts the NULL-text doc, so avgdl must count it too
+    docs = spark.createDataFrame(
+        [(1, None), (2, "a b c d"), (3, "")], "doc_id long, text string"
+    )
+    idx = build_index_from_docs(docs)
+    assert idx.n_docs == 3
+    assert idx.avgdl == pytest.approx(4 / 3)
+    assert sorted(tuple(r) for r in idx.doc_len.collect()) == [
+        (1, 0), (2, 4), (3, 0)
+    ]
+    idx.release()
+
+
+@pytest.mark.parametrize(
+    "build, ddl",
+    [
+        (build_index, "url string, text string"),
+        (build_index_from_docs, "doc_id long, text string"),
+    ],
+    ids=["build_index", "build_index_from_docs"],
+)
+def test_empty_input_is_refused(spark, build, ddl):
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    with pytest.raises(ValueError, match="the input table has no documents"):
+        build(spark.createDataFrame([], ddl))
+    assert rdds().size() == before  # the refused build released its caches
 
 
 def _spark_run(spark, index_tables, queries_pdf, k=K):

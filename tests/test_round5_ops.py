@@ -19,6 +19,7 @@ from sequential_query_expansion_spark.operators import (
 from sequential_query_expansion_spark.operators.text_analysis import (
     repetition_stats,
 )
+from sequential_query_expansion_spark.util import Caches
 
 
 def _docs(spark, texts):
@@ -352,10 +353,13 @@ class TestPackSequences:
             [(1, 5), (2, 3), (3, 4), (4, 2), (5, 6), (6, 1)],
             "doc_id long, n_tokens long",
         )
-        out = {
-            r["doc_id"]: r
-            for r in training_prep.pack_sequences(df, capacity=8).collect()
-        }
+        with Caches() as caches:
+            out = {
+                r["doc_id"]: r
+                for r in training_prep.pack_sequences(
+                    df, capacity=8, caches=caches
+                ).collect()
+            }
         # cumulative starts: 0, 5, 8, 12, 14, 20
         assert [out[i]["start_tok"] for i in range(1, 7)] == [0, 5, 8, 12, 14, 20]
         assert [out[i]["bin_id"] for i in range(1, 7)] == [0, 0, 1, 1, 1, 2]
@@ -367,8 +371,13 @@ class TestPackSequences:
             [(i, (i * 7) % 11 + 1) for i in range(200)],
             "doc_id long, n_tokens long",
         )
-        a = training_prep.pack_sequences(df.repartition(1), 64).toPandas()
-        b = training_prep.pack_sequences(df.repartition(13), 64).toPandas()
+        with Caches() as caches:
+            a = training_prep.pack_sequences(
+                df.repartition(1), 64, caches=caches
+            ).toPandas()
+            b = training_prep.pack_sequences(
+                df.repartition(13), 64, caches=caches
+            ).toPandas()
         a = a.sort_values("doc_id").reset_index(drop=True)
         b = b.sort_values("doc_id").reset_index(drop=True)
         assert a.equals(b)
@@ -376,7 +385,8 @@ class TestPackSequences:
     def test_rejects_bad_capacity(self, spark):
         with pytest.raises(ValueError):
             training_prep.pack_sequences(
-                spark.createDataFrame([(1, 1)], "doc_id long, n_tokens long"), 0
+                spark.createDataFrame([(1, 1)], "doc_id long, n_tokens long"),
+                0, caches=Caches(),
             )
 
     def test_duplicate_ids_get_distinct_offsets(self, spark):
@@ -385,8 +395,9 @@ class TestPackSequences:
         df = spark.createDataFrame(
             [(7, 5), (7, 5)], "doc_id long, n_tokens long"
         )
-        out = training_prep.pack_sequences(df, capacity=8)
-        assert sorted(r["start_tok"] for r in out.collect()) == [0, 5]
+        with Caches() as caches:
+            out = training_prep.pack_sequences(df, capacity=8, caches=caches)
+            assert sorted(r["start_tok"] for r in out.collect()) == [0, 5]
 
     @pytest.mark.parametrize(
         "rows, n_null",
@@ -397,5 +408,7 @@ class TestPackSequences:
         # an all-NULL range partition has no token sum (TypeError on
         # int(None)); a NULL among counts would get a NULL start offset
         df = spark.createDataFrame(rows, "doc_id long, n_tokens long")
-        with pytest.raises(ValueError, match=rf"^{n_null} row\(s\) have a NULL"):
-            training_prep.pack_sequences(df, capacity=8)
+        with Caches() as caches, pytest.raises(
+            ValueError, match=rf"^{n_null} row\(s\) have a NULL"
+        ):
+            training_prep.pack_sequences(df, capacity=8, caches=caches)
